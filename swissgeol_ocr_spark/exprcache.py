@@ -28,7 +28,10 @@ def cached_cols(key, builder):
     ``builder`` must construct its Columns exclusively from
     ``F.col``-style unresolved references and constants — never from a
     bound ``df["col"]`` reference, which would leak one plan's expr IDs
-    into another's.
+    into another's. Concurrent builds (streaming ``foreachBatch``
+    triggers) may both run ``builder()`` and either result may win;
+    that race is benign and needs no lock, because each dict get/set is
+    atomic under the GIL and both results are equivalent unresolved ASTs.
     """
     from pyspark import SparkContext
 

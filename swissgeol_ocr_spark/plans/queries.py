@@ -54,67 +54,44 @@ TABLES = (
 )
 
 
-# Inferred-schema memo for _t: driver-side parquet schema inference costs
-# ~75 ms per read (footer fetch + merge) and the bench re-builds every
-# query from scratch each pass, so the suite paid it ~25× per pass. The
-# cached artifact is the pure-Python StructType ONLY — never file
-# listings, plans or data; every call still returns a FRESH DataFrame
-# (fresh expr IDs, so self-joins of the same table keep working) and
-# every action still scans the parquet. Keyed by the file fingerprint
-# (size + mtime of the file or directory entries) so a rewritten test
-# fixture re-infers; any stat failure (remote paths) falls back to the
-# plain inferring read.
-_T_SCHEMA_CACHE: dict = {}
-
-
-def _parquet_fingerprint(path: str):
-    ap = os.path.realpath(path)
-    if os.path.isdir(ap):
-        entries = []
-        with os.scandir(ap) as it:   # close the fd on every exit path
-            for e in it:
-                if e.is_dir():
-                    # nested (partitioned) layout: an in-place rewrite
-                    # inside a subdirectory would not move any top-level
-                    # size/mtime, so the flat fingerprint cannot see it —
-                    # opt out (OSError takes the plain inferring read)
-                    raise OSError("nested layout — not fingerprintable flat")
-                entries.append((e.name, e.stat().st_size, e.stat().st_mtime_ns))
-                if len(entries) > 4096:
-                    # a table with thousands of local part files would pay
-                    # more for the fingerprint walk than inference saves
-                    raise OSError("too many entries to fingerprint")
-        return ap, tuple(sorted(entries))
-    st = os.stat(ap)
-    return ap, (st.st_size, st.st_mtime_ns)
-
-
-# session confs that change what parquet schema inference RETURNS for the
-# same file — they must be part of the memo key or a differently-configured
-# session in the same process would be served the other session's types
-_T_INFER_CONFS = (
-    "spark.sql.parquet.binaryAsString",
-    "spark.sql.parquet.int96AsTimestamp",
-    "spark.sql.parquet.inferTimestampNTZ.enabled",
-    "spark.sql.caseSensitive",
-)
+# Declared schema per table: the table's schema lives here, never in a
+# parquet footer, so no read pays driver-side schema inference. Spark
+# 4.1.2 does not check a file against a declared schema at read time: an
+# int32 file column is silently widened to bigint and a missing column
+# reads as null; only incompatible types (string vs bigint) raise. The
+# loud failure is tests/test_queries.py::test_declared_schemas_match_inferred.
+SCHEMAS = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": (
+        "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, "
+        "c_mktsegment string"
+    ),
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+    "part": (
+        "p_partkey bigint, p_name string, p_brand string, p_type string, "
+        "p_size int, p_retailprice double"
+    ),
+    "orders": (
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+        "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string"
+    ),
+    "lineitem": (
+        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int, "
+        "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
+        "l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz"
+    ),
+    "events": (
+        "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+        "value double, props string"
+    ),
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        fp = _parquet_fingerprint(path)
-    except OSError:
-        return spark.read.parquet(path)
-    key = (fp, tuple(spark.conf.get(c, None) for c in _T_INFER_CONFS))
-    schema = _T_SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        if len(_T_SCHEMA_CACHE) > 512:
-            _T_SCHEMA_CACHE.clear()
-        _T_SCHEMA_CACHE[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+    return spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _spread(df: DataFrame, *cols: str, min_bytes: int = 512 * 1024) -> DataFrame:
@@ -789,12 +766,6 @@ FROM m WHERE is_probe = 1
 # instead of the weaker rows-only check streaming ops usually get.
 # ---------------------------------------------------------------------------
 
-_EVENT_DDL = (
-    "event_id bigint, ts timestamp_ntz, user_id bigint, "
-    "event_type string, value double, props string"
-)
-
-
 def _stream_workdir() -> str:
     """Temp working tree for a bounded streaming run, reclaimed at process
     exit (atexit, best-effort). NOT reclaimed earlier on purpose: the
@@ -822,20 +793,20 @@ def _drain(q, timeout_s: int = 600) -> None:
         )
 
 
-def _staged_two_file_stream(first: DataFrame, second: DataFrame, schema: str):
+def _staged_two_file_stream(first: DataFrame, second: DataFrame):
     """Stage two DataFrames as a two-file micro-batch stream
     (maxFilesPerTrigger=1 → exactly two triggers, so per-key state MUST
     carry across a micro-batch boundary — the path that distinguishes a
     streaming operator from a warm re-run of the batch one). The file
     source processes oldest-first, so ``first`` is trigger one. Returns
-    (stream_df, workdir)."""
+    (stream_df, workdir); the stream reads with ``first``'s schema."""
     work = _stream_workdir()
     in_dir = f"{work}/in"
     first.repartition(1).write.parquet(in_dir)
     second.repartition(1).write.mode("append").parquet(in_dir)
     spark = first.sparkSession
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(first.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(in_dir)
     )
@@ -857,7 +828,7 @@ def _staged_event_stream(spark: SparkSession, sf_dir: str, split: str):
         mid = ev.selectExpr("percentile_approx(ts, 0.5) AS m").first().m
         first = ev.filter(F.col("ts") <= mid)
         second = ev.filter(F.col("ts") > mid)
-    return _staged_two_file_stream(first, second, _EVENT_DDL)
+    return _staged_two_file_stream(first, second)
 
 
 def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1014,7 +985,6 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream, work = _staged_two_file_stream(
         docs.filter(F.col("doc_id") % 2 == 0),
         docs.filter(F.col("doc_id") % 2 == 1).unionByName(dups),
-        "doc_id bigint, text string",
     )
     q = (
         dedup_stream(stream)
@@ -1048,7 +1018,6 @@ def q_minhash_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream, work = _staged_two_file_stream(
         docs.filter(F.col("doc_id") <= mid),
         docs.filter(F.col("doc_id") > mid),
-        "doc_id bigint, text string",
     )
     q = minhash_neardup_stream(
         stream,

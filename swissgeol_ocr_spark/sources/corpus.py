@@ -108,6 +108,19 @@ def _pre_partition(docs: DataFrame) -> DataFrame:
     )
 
 
+def _mega_words(factor: int):
+    """``words`` repeated ``factor`` times for the deterministic mega
+    subset (doc_id hash ≡ 0 mod MEGA_MOD), unchanged otherwise; one
+    builder per cache key, shared by the line and word corpora."""
+    return _cached_cols(
+        ("mega_words", factor),
+        lambda: F.when(
+            F.pmod(_h(F.concat(F.col("doc_id"), F.lit(":m"))), F.lit(MEGA_MOD)) == 0,
+            F.flatten(F.array_repeat(F.col("words"), factor)),
+        ).otherwise(F.col("words")),
+    )
+
+
 def documents_to_spans(
     docs: DataFrame,
     mega_docs: bool = True,
@@ -128,17 +141,7 @@ def documents_to_spans(
         F.split(F.col("text"), " ").alias("words"),
     )
     if mega_docs:
-        factor = mega_factor or MEGA_FACTOR
-        d = d.withColumn(
-            "words",
-            _cached_cols(
-                ("mega_words", factor),
-                lambda: F.when(
-                    F.pmod(_h(F.concat(F.col("doc_id"), F.lit(":m"))), F.lit(MEGA_MOD)) == 0,
-                    F.flatten(F.array_repeat(F.col("words"), factor)),
-                ).otherwise(F.col("words")),
-            ),
-        )
+        d = d.withColumn("words", _mega_words(mega_factor or MEGA_FACTOR))
     d = d.withColumn(
         "layout", F.pmod(_h(F.concat(F.col("doc_id"), F.lit(":l"))), F.lit(4)).cast("int")
     )
@@ -291,16 +294,7 @@ def documents_to_word_spans(
         F.split(F.col("text"), " ").alias("words"),
     )
     if mega_docs:
-        d = d.withColumn(
-            "words",
-            _cached_cols(
-                ("mega_words", MEGA_FACTOR),
-                lambda: F.when(
-                    F.pmod(_h(F.concat(F.col("doc_id"), F.lit(":m"))), F.lit(MEGA_MOD)) == 0,
-                    F.flatten(F.array_repeat(F.col("words"), MEGA_FACTOR)),
-                ).otherwise(F.col("words")),
-            ),
-        )
+        d = d.withColumn("words", _mega_words(MEGA_FACTOR))
     d = d.withColumn("n_words", F.size("words"))
     d = d.withColumn(
         "n_pages",

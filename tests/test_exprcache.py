@@ -1,7 +1,7 @@
-"""Round-6 construction-memo pins: the unresolved-Column cache
-(swissgeol_ocr_spark.exprcache) and the _t inferred-schema memo cache
-ASTs/schemas ONLY — results must be identical to fresh construction, and
-the schema memo must re-infer when the file under a path changes."""
+"""Construction-memo pins: the unresolved-Column cache
+(swissgeol_ocr_spark.exprcache) caches ASTs ONLY — results must be
+identical to fresh construction — and _t returns a fresh DataFrame per
+read of a declared-schema table."""
 
 from pyspark.sql import functions as F
 
@@ -33,27 +33,6 @@ def test_cached_cols_returns_same_ast_and_fresh_builds_match(spark, tmp_path):
     again = {r.doc_id: r.n_spans for r in
              corpus.documents_to_spans(d1, pre_partition=False).collect()}
     assert again == out1
-
-
-def test_t_schema_memo_invalidates_on_rewrite(spark, tmp_path):
-    """_t pins the inferred schema per file fingerprint: a rewritten
-    parquet with a DIFFERENT schema must be re-inferred, never served the
-    stale schema."""
-    from swissgeol_ocr_spark.plans import queries as Q
-
-    p = str(tmp_path)
-    spark.createDataFrame([(1, "x")], "doc_id long, text string") \
-        .coalesce(1).write.mode("overwrite").parquet(f"{p}/documents.parquet")
-    first = Q._t(spark, p, "documents")
-    assert set(first.columns) == {"doc_id", "text"}
-    # second read of the unchanged file serves the memoized schema
-    assert set(Q._t(spark, p, "documents").columns) == {"doc_id", "text"}
-
-    spark.createDataFrame([(2, "y", 9)], "doc_id long, text string, extra long") \
-        .coalesce(1).write.mode("overwrite").parquet(f"{p}/documents.parquet")
-    second = Q._t(spark, p, "documents")
-    assert set(second.columns) == {"doc_id", "text", "extra"}
-    assert second.select("extra").first()[0] == 9
 
 
 def test_memoized_columns_survive_session_restart():
@@ -100,7 +79,7 @@ def test_memoized_columns_survive_session_restart():
 
 
 def test_t_self_join_keeps_fresh_expr_ids(spark, tmp_path):
-    """_t returns a FRESH DataFrame per call (only the schema is shared):
+    """_t returns a FRESH DataFrame per call (only the declared schema is shared):
     joining two _t reads of the same table must behave like two
     independent reads, not a degenerate self-join."""
     from swissgeol_ocr_spark.plans import queries as Q

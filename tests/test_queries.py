@@ -1782,3 +1782,34 @@ def test_registry_prefix_covers_flagship():
     assert verdict_faces <= prefix, verdict_faces - prefix
     # manifest invariant: 75 registered, 50 externally verified
     assert len(QUERIES) == 75
+
+
+def test_declared_schemas_match_inferred(spark):
+    """Every table file's footer schema equals its declared SCHEMAS entry
+    exactly (names, types, nullability), in every SF directory present:
+    the TESTDATA tables beside SF_DIR and the benchmark's read-only
+    copies. Spark widens or null-fills a file read under a declared
+    schema without complaint, so this is the one place a drifted
+    declaration fails loudly."""
+    import glob
+    import os
+
+    from pyspark.sql.types import StructType
+
+    from swissgeol_ocr_spark.plans.queries import SCHEMAS
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    dirs = glob.glob(os.path.join(os.path.dirname(SF_DIR), "sf*")) + glob.glob(
+        os.path.join(repo, "perfbench", "testdata", "sf*")
+    )
+    assert set(SCHEMAS) == set(TABLES)
+    checked = []
+    for d in sorted(dirs):
+        for name in TABLES:
+            p = f"{d}/{name}.parquet"
+            if os.path.exists(p):
+                assert spark.read.parquet(p).schema == StructType.fromDDL(
+                    SCHEMAS[name]
+                ), p
+                checked.append(p)
+    assert checked, "no SF directory found"
