@@ -102,22 +102,16 @@ def _drain_or_die(q, timeout_s: int) -> None:
     _drain(q, timeout_s)
 
 
-def run_batch(spark, in_dir: str, out_dir: str, passthrough: bool) -> float:
+def run_batch(spark, in_dir: str, out_dir: str) -> float:
     from swissgeol_ocr_spark.plans.pipeline import extract_pipeline
 
     shutil.rmtree(out_dir, ignore_errors=True)
     t0 = time.perf_counter()
     # repartition=False: the staged input is already well-spread (K×32
-    # files) — identical input contract to the stream leg.
-    # passthrough=False is the apples-to-apples leg: extract_stream is a
-    # bare mapInArrow, so pricing ONLY micro-batch orchestration requires
-    # the batch leg to push every doc through the same kernel; the
-    # passthrough=True leg is reported separately as the production
-    # batch number (no-media docs take the cheaper JVM branch).
+    # files) — identical input contract to the stream leg, and the same
+    # mapInArrow kernel extract_stream runs.
     extract_pipeline(
-        spark.read.parquet(in_dir),
-        repartition=False,
-        use_jvm_passthrough=passthrough,
+        spark.read.parquet(in_dir), repartition=False
     ).write.parquet(out_dir)
     return time.perf_counter() - t0
 
@@ -152,7 +146,7 @@ def run_stream(spark, in_dir: str, out_dir: str, ckpt: str) -> tuple[float, int]
 
 def run_stream_full(spark, in_dir: str, out_dir: str, ckpt: str) -> tuple[float, int]:
     """The --mode batch face: foreachBatch runs the FULL pipeline
-    (passthrough + mega split) per micro-batch — prices what a mega-safe
+    (kernel + mega split) per micro-batch — prices what a mega-safe
     streaming deployment pays vs the stateless sink.
 
     repartition=False: same input contract as the batch legs (staged
@@ -236,27 +230,22 @@ def main() -> None:
             flush=True,
         )
 
-        kern_t, prod_t, stream_t, full_t, trig_counts = [], [], [], [], []
+        batch_t, stream_t, full_t, trig_counts = [], [], [], []
         for p in range(PASSES):  # interleaved best-of
-            kern_t.append(
-                run_batch(spark, in_dir, f"{work}/out_b", passthrough=False)
-            )
+            batch_t.append(run_batch(spark, in_dir, f"{work}/out_b"))
             s_dt, s_trig = run_stream(
                 spark, in_dir, f"{work}/out_s", f"{work}/ckpt"
             )
             stream_t.append(s_dt)
             trig_counts.append(s_trig)
-            prod_t.append(
-                run_batch(spark, in_dir, f"{work}/out_b", passthrough=True)
-            )
             f_dt, f_trig = run_stream_full(
                 spark, in_dir, f"{work}/out_f", f"{work}/ckpt_f"
             )
             full_t.append(f_dt)
             print(
-                f"pass {p}: kernel-batch {kern_t[-1]:.2f}s stream"
-                f" {s_dt:.2f}s ({s_trig} triggers) prod-batch"
-                f" {prod_t[-1]:.2f}s full-pipeline-stream {f_dt:.2f}s"
+                f"pass {p}: batch {batch_t[-1]:.2f}s stream"
+                f" {s_dt:.2f}s ({s_trig} triggers)"
+                f" full-pipeline-stream {f_dt:.2f}s"
                 f" ({f_trig} triggers)",
                 flush=True,
             )
@@ -272,7 +261,7 @@ def main() -> None:
             print(f"sess pass {p}: batch {sb[-1]:.2f}s stream {ss[-1]:.2f}s",
                   flush=True)
 
-        b, s, prod, fp = min(kern_t), min(stream_t), min(prod_t), min(full_t)
+        b, s, fp = min(batch_t), min(stream_t), min(full_t)
         n_trig = max(trig_counts)
         sbb, ssb = min(sb), min(ss)
         lines = [
@@ -291,29 +280,24 @@ def main() -> None:
             "",
             "| leg | wall | docs/s |",
             "|---|---|---|",
-            f"| batch, kernel-only (`use_jvm_passthrough=False` — same"
-            f" work as the stream leg) | {b:.2f}s | {n_docs / b:,.0f} |",
+            f"| batch (`extract_pipeline`, same kernel as the stream leg)"
+            f" | {b:.2f}s | {n_docs / b:,.0f} |",
             f"| stream ({n_trig} micro-batches, checkpointed exactly-once"
             f" sink) | {s:.2f}s | {n_docs / s:,.0f} |",
-            f"| batch, production (passthrough on: no-media docs take the"
-            f" JVM branch) | {prod:.2f}s | {n_docs / prod:,.0f} |",
             f"| stream, full pipeline (`--mode batch --no-repartition`:"
             f" foreachBatch runs extract_pipeline per micro-batch —"
             f" mega-safe, at-least-once) | {fp:.2f}s | {n_docs / fp:,.0f} |",
             "",
-            f"Streaming overhead: ×{s / b:.2f} wall vs the KERNEL-ONLY"
-            f" batch ({(s - b):.2f}s across {n_trig} triggers, measured"
+            f"Streaming overhead: ×{s / b:.2f} wall vs the batch leg"
+            f" ({(s - b):.2f}s across {n_trig} triggers, measured"
             " from the drained query's progress — per-trigger planning +"
             " sink commit + source bookkeeping). The comparison is"
-            " apples-to-apples: extract_stream is a bare mapInArrow, so"
-            " the kernel-only batch leg pushes every doc through the same"
-            " kernel. The production row is the default-config batch"
-            " number (passthrough on); its delta vs kernel-only is"
-            " mix- and host-dependent and can sit inside same-day noise."
-            f" The full-pipeline stream row (×{fp / prod:.2f} vs the"
-            " production batch it embeds) prices the mega-safe deployment:"
-            " per-trigger it re-plans the whole pipeline (passthrough"
-            " split + both mega branches) rather than one stateless"
+            " apples-to-apples: extract_stream is a bare mapInArrow, and"
+            " the batch pipeline pushes every doc through the same kernel."
+            f" The full-pipeline stream row (×{fp / b:.2f} vs the"
+            " batch it embeds) prices the mega-safe deployment:"
+            " per-trigger it re-plans the whole pipeline (both mega"
+            " branches) rather than one stateless"
             " mapInArrow — the premium a feed that can contain mega"
             " documents pays. Measured with --no-repartition (the staged"
             " feed is well-spread, matching the batch legs' input"

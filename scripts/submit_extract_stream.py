@@ -28,8 +28,8 @@ Two modes, one trade:
   the batch pipeline's page-chunk subtree exists to break. Right choice
   when the feed is known sub-cutoff (the real corpus is ~99% there).
 * ``--mode batch``: foreachBatch runs the FULL batch pipeline
-  (extract_pipeline: JVM passthrough for no-media docs + page-split/
-  reassemble for mega docs) per micro-batch and appends parquet.
+  (extract_pipeline: the kernel plus page-split/reassemble for mega
+  docs) per micro-batch and appends parquet.
   AT-LEAST-ONCE output: a crash between the append and the checkpoint
   commit replays one micro-batch on restart — dedup downstream on doc_id
   (the skip-existing anti-join, reference ocr/target.py:29-33) or accept

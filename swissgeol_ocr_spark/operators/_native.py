@@ -7,8 +7,10 @@ The shared object is compiled ONCE per source hash into a cache directory
 with an atomic rename, so the 32 executor-side Python workers that import
 this module concurrently either find the cached build or race benignly
 (each compiles to a unique temp file; the rename is idempotent). Any
-failure — no compiler, read-only cache, load error — degrades to
-``available() == False`` and callers keep the numpy path, which is
+failure — no compiler, read-only cache, load error — logs one warning
+per process on the ``swissgeol_ocr_spark.native`` logger (with gcc's
+stderr when the compile failed) and degrades to
+``available() == False``; callers keep the numpy path, which is
 semantically identical (pinned by
 tests/test_readingorder.py::test_native_matches_numpy_random and the
 golden/twin suites, which exercise whichever path is active).
@@ -27,6 +29,7 @@ from __future__ import annotations
 
 import ctypes
 import hashlib
+import logging
 import os
 import subprocess
 import tempfile
@@ -44,6 +47,8 @@ _CFLAGS = [
 ]
 
 _lib: "ctypes.CDLL | None | bool" = None  # None = not tried, False = failed
+
+_log = logging.getLogger("swissgeol_ocr_spark.native")
 
 
 def _cache_dir() -> str:
@@ -87,7 +92,16 @@ def _build_and_load() -> "ctypes.CDLL | None":
             ctypes.POINTER(ctypes.c_int),
         ]
         return lib
-    except Exception:
+    except Exception as exc:
+        # once per process: available() caches the failure in _lib
+        stderr = getattr(exc, "stderr", None)
+        if isinstance(stderr, bytes):
+            stderr = stderr.decode(errors="replace")
+        _log.warning(
+            "native reading-order kernel unavailable, using the numpy path: %r%s",
+            exc,
+            f"\ngcc stderr:\n{stderr.strip()}" if stderr else "",
+        )
         return None
 
 

@@ -158,9 +158,9 @@ def _extract_batches(
         ).to_numpy(zero_copy_only=False)
         # null offset/page_no → 0 (the salvage rule, applied proactively):
         # a null would otherwise become NaN in to_numpy and order LAST in
-        # the lexsort fast path while the JVM passthrough's coalesce(…, 0)
-        # orders it first. fill_null is skipped entirely for healthy
-        # batches (null_count == 0 keeps the zero-copy view).
+        # the gather's lexsort, while the mega split's coalesce(…, 0) orders
+        # it first. fill_null is skipped entirely for healthy batches
+        # (null_count == 0 keeps the zero-copy view).
         off_arr = struct.field("offset")
         page_arr = struct.field("page_no")
         if off_arr.null_count:
@@ -340,91 +340,6 @@ def _extract_batches(
             )
 
 
-def jvm_passthrough(df: DataFrame) -> DataFrame:
-    """Born-digital fast path entirely in JVM expressions — the relational
-    twin of the kernel's no-media shortcut (operators/extract.py:90-95,
-    mirroring reference ocr/__init__.py:128-131 + util.py:35: no image ⇒
-    digitally born ⇒ untouched ordered passthrough).
-
-    Must stay bit-identical to ``np.lexsort((offsets, page_nos))`` + dense
-    re-rank: sort key = (page_no, offset, original array position) — the
-    position term reproduces lexsort's stability for duplicate
-    (page, offset) pairs. No Arrow round-trip, no Python, no shuffle.
-
-    Round-6 shape change (values identical, plan cheaper): the metric
-    columns are derived from the UNSORTED spans array — a permutation
-    preserves size() and the distinct page set — so only ``spans_out``
-    references the keyed struct sort. A metrics-only consumer (the
-    flagship per-doc metrics face, the bench's sum(n_spans_out) forcing)
-    then prunes the sort away entirely and the passthrough branch reduces
-    to three cheap array folds; the full-sequence consumers
-    (extract_sequence / extract_stream) keep the sort, evaluated once in
-    the same projection (guide §1.2: don't compute what the consumer
-    throws away)."""
-    from swissgeol_ocr_spark.exprcache import cached_cols
-
-    def _build_ordered_cols():
-        keyed = F.transform(
-            "spans",
-            lambda s, i: F.struct(
-                # null page/offset → 0, matching the kernel path (a null
-                # numeric field raises in the Arrow kernel → salvage maps it
-                # to 0, operators/extract.py _ints); struct sort would
-                # otherwise put nulls first and the two branches would
-                # disagree on ordering
-                F.coalesce(s["page_no"], F.lit(0)).alias("p"),
-                F.coalesce(s["offset"], F.lit(0)).alias("o"),
-                i.alias("i"),
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-            ),
-        )
-        # sorted array materialized once (struct sort is lexicographic on
-        # (p, o, i); i is unique so later fields never compare); metrics
-        # come from the unsorted spans (same size / same distinct page set)
-        return (
-            F.sort_array(keyed),
-            F.size("spans").cast("int"),
-            F.size(
-                F.array_distinct(
-                    F.transform("spans", lambda s: F.coalesce(s["page_no"], F.lit(0)))
-                )
-            ).cast("int"),
-        )
-
-    # pure ASTs over the fixed names spans/_ord — built once per JVM
-    # (exprcache), not per query build
-    ord_col, n_col, np_col = cached_cols(("pt", "ordered"), _build_ordered_cols)
-    ordered = df.select(
-        "doc_id",
-        ord_col.alias("_ord"),
-        n_col.alias("_n"),
-        np_col.alias("_np"),
-    )
-    spans_out = cached_cols(
-        ("pt", "spans_out"),
-        lambda: F.transform(
-            "_ord",
-            lambda s, i: F.struct(
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                i.cast("int").alias("offset"),
-            ),
-        ),
-    )
-    return ordered.select(
-        "doc_id",
-        spans_out.alias("spans_out"),
-        F.col("_n").alias("n_spans_in"),
-        F.col("_n").alias("n_spans_out"),
-        F.col("_np").alias("n_pages"),
-        F.lit("ok").alias("status"),
-        F.spark_partition_id().alias("partition_id"),
-    )
-
-
 def extract_pipeline(
     spans_df: DataFrame,
     config: ExtractConfig | None = None,
@@ -432,7 +347,6 @@ def extract_pipeline(
     done_df: DataFrame | None = None,
     repartition: bool = True,
     has_mega: bool | None = None,
-    use_jvm_passthrough: bool = True,
 ) -> DataFrame:
     """spans(doc_id, spans) → (doc_id, spans_out, n_spans_in, n_spans_out,
     n_pages), partitioned by hash(doc_id), with mega-docs split page-wise.
@@ -445,10 +359,9 @@ def extract_pipeline(
       False when table stats prove max(n_spans) ≤ cutoff (Iceberg column
       max — drops the split subtree from the plan), True to document known
       skew (same plan as None).
-    * optional hint columns on the input: ``n_spans`` (span count) and
-      ``has_media`` (any span.kind == 'media') — plain scalar columns make
-      the branch predicates pushdown-able so no branch re-reads the heavy
-      spans column just to route rows.
+    * an optional ``n_spans`` (span count) hint column on the input — a
+      plain scalar column makes the small/big predicate pushdown-able so
+      neither branch re-reads the heavy spans column just to route rows.
 
     The mega-doc path (SURVEY §4.2): AQE's skew handling cannot split a
     single giant row, so documents with more than
@@ -457,35 +370,11 @@ def extract_pipeline(
     reference: ocr/__init__.py:73-78 processes them one by one), extracted
     in parallel, and reassembled with an ordered window — bit-identical to
     the unsplit result.
-
-    The born-digital passthrough (use_jvm_passthrough, non-aggressive only):
-    no-media documents never enter the Arrow kernel — their output is a pure
-    JVM sort/re-rank (see ``jvm_passthrough``), saving the Python round-trip
-    for the large born-digital fraction of a web corpus.
     """
     config = config or ExtractConfig()
     spans_df = resume_filter(spans_df, done_df)
 
     n_part = num_partitions or spans_df.sparkSession.sparkContext.defaultParallelism
-    # Prefer a pre-materialized span count when the table carries one — a
-    # plain int column is a pushdown-able predicate, so the small/big split
-    # prunes at the scan instead of re-reading the heavy spans column twice.
-    if "n_spans" in spans_df.columns:
-        sized = spans_df.withColumnRenamed("n_spans", "_n")
-    else:
-        sized = spans_df.withColumn("_n", F.size("spans"))
-    # NULL size (null spans array / null hint) must not drop the row from
-    # both sides of the small/big split — treat it as an empty document
-    sized = sized.withColumn("_n", F.coalesce(F.col("_n"), F.lit(0)))
-
-    hint_cols = [c for c in ("has_media",) if c in sized.columns]
-    if "has_media" in sized.columns:
-        media_pred = F.col("has_media")
-    else:
-        media_pred = F.exists("spans", lambda s: s["kind"] == F.lit("media"))
-    # a NULL spans array (or hint) must not vanish from the split: route it
-    # to the kernel branch, whose Arrow driver preserves it as an empty doc
-    media_pred = F.coalesce(media_pred, F.lit(True))
 
     def run_kernel(df: DataFrame, do_shuffle: bool | None = None) -> DataFrame:
         # The explicit hash(doc_id) repartition (north rule) evens out the
@@ -493,7 +382,8 @@ def extract_pipeline(
         # bucketed/partitioned by doc_id upstream (the steady state for a
         # 100 TB Iceberg table), ``repartition=False`` skips the redundant
         # full-corpus shuffle — the single biggest cost after the kernel.
-        df = df.drop(*hint_cols)
+        # Hint and routing columns are pruned before the Arrow boundary.
+        df = df.select("doc_id", "spans")
         if repartition if do_shuffle is None else do_shuffle:
             df = df.repartition(n_part, "doc_id")
         return df.mapInArrow(
@@ -506,29 +396,22 @@ def extract_pipeline(
             F.spark_partition_id(),
         )
 
-    pt_out = None
-    if use_jvm_passthrough and not config.use_aggressive_strategy:
-        pt_pred = ~media_pred
-        if has_mega is not False:
-            # An above-cutoff born-digital doc must NOT take the passthrough:
-            # its whole-array JVM sort is one task per doc (the exact skew
-            # the split exists to break) and the keyed-struct copies of a
-            # 50k-span array are a GC storm (measured: 38% of executor time
-            # in GC with mega docs in the passthrough). Route it to the
-            # kernel branch, where the page split applies; passthrough ==
-            # kernel-path and split == plain are both pinned bit-identical.
-            pt_pred = pt_pred & (F.col("_n") <= config.mega_doc_span_cutoff)
-        pt_out = jvm_passthrough(sized.filter(pt_pred).drop("_n", *hint_cols))
-        sized = sized.filter(~pt_pred)
-
-    def with_pt(out: DataFrame) -> DataFrame:
-        return out if pt_out is None else pt_out.unionByName(out)
-
     if has_mega is False:
-        return with_pt(run_kernel(sized.drop("_n")))
+        return run_kernel(spans_df)
 
-    small = sized.filter(F.col("_n") <= config.mega_doc_span_cutoff).drop("_n")
-    big = sized.filter(F.col("_n") > config.mega_doc_span_cutoff).drop("_n")
+    # Prefer a pre-materialized span count when the table carries one — a
+    # plain int column is a pushdown-able predicate, so the small/big split
+    # prunes at the scan instead of re-reading the heavy spans column twice.
+    if "n_spans" in spans_df.columns:
+        sized = spans_df.withColumnRenamed("n_spans", "_n")
+    else:
+        sized = spans_df.withColumn("_n", F.size("spans"))
+    # NULL size (null spans array / null hint) must not drop the row from
+    # both sides of the small/big split — treat it as an empty document
+    sized = sized.withColumn("_n", F.coalesce(F.col("_n"), F.lit(0)))
+
+    small = sized.filter(F.col("_n") <= config.mega_doc_span_cutoff)
+    big = sized.filter(F.col("_n") > config.mega_doc_span_cutoff)
 
     small_out = run_kernel(small)
 
@@ -561,7 +444,7 @@ def extract_pipeline(
                 F.collect_list(
                     F.struct(
                         # null page/offset → 0 (salvage rule), matching the
-                        # kernel/passthrough ordering for null fields
+                        # unsplit kernel's ordering for null fields
                         F.coalesce(F.col("span.page_no"), F.lit(0)).alias("pg"),
                         F.coalesce(F.col("span.offset"), F.lit(0)).alias("o"),
                         F.col("pos").alias("p"),
@@ -642,7 +525,7 @@ def extract_pipeline(
         )
     )
 
-    return with_pt(small_out.unionByName(reassembled))
+    return small_out.unionByName(reassembled)
 
 
 def debug_table(out_df: DataFrame, aggressive: bool = False) -> DataFrame:

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from swissgeol_ocr_spark.functions import simsearch, textops
-from swissgeol_ocr_spark.plans.config import DedupConfig
+from swissgeol_ocr_spark.plans.config import DedupConfig, ExtractConfig
 
 # module-level default: the Spark query face AND the generated SQL oracles
 # read the same instance, so changing the scale knobs re-sizes both sides
@@ -5018,11 +5018,9 @@ def q_extract_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     spans = documents_to_spans(docs)
-    # metrics-only output: Catalyst prunes spans_out through both consumer
-    # branches, so re-evaluating the (pruned) synthesis per branch beats a
-    # second exchange (interleaved best-of A/B at sf0.1: pre+norep 1.82s,
-    # old serial-synthesis 1.90s, pre+rep 2.17s). The full-output
-    # extract_sequence keeps the exchange instead.
+    # one consumer (the kernel; plus the mega split when the hint says
+    # so): the synthesis' own width exchange feeds the kernel directly, so
+    # a second hash(doc_id) exchange would only re-shuffle.
     out = extract_pipeline(
         spans, repartition=False,
         has_mega=_mega_hint(spans, key=(sf_dir, "spans"))
@@ -5035,15 +5033,14 @@ def q_extract_aggressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep on every page + C6 mask suppression), as the exploded span
     sequence. Oracle: golden parquet precomputed by the pure-python
     corpus+kernel twin (scripts/make_golden.py)."""
-    from swissgeol_ocr_spark.plans.config import ExtractConfig
     from swissgeol_ocr_spark.plans.pipeline import extract_pipeline
     from swissgeol_ocr_spark.sources.corpus import documents_to_spans
 
     docs = _t(spark, sf_dir, "documents")
     spans = documents_to_spans(docs)
     out = extract_pipeline(
-        # aggressive strategy disables the passthrough: single consumer, same
-        # rule as extract_words — no second exchange
+        # one consumer (the kernel), same rule as extract_words — no
+        # second exchange
         spans, ExtractConfig(use_aggressive_strategy=True), repartition=False,
         has_mega=_mega_hint(spans, key=(sf_dir, "spans"))
     )
@@ -5063,16 +5060,15 @@ def q_extract_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch layout detection (assemble.lines_from_words band grouping
     + the draw.py:34-39 space rule) on every page. Oracle: golden parquet
     from the pure-python corpus+kernel twin (scripts/make_golden.py)."""
-    from swissgeol_ocr_spark.plans.config import ExtractConfig
     from swissgeol_ocr_spark.plans.pipeline import extract_pipeline
     from swissgeol_ocr_spark.sources.corpus import documents_to_word_spans
 
     docs = _t(spark, sf_dir, "documents")
     spans = documents_to_word_spans(docs)
     out = extract_pipeline(
-        # single consumer (all word docs are scanned: no passthrough branch) —
-        # the pre-partitioned synthesis feeds the kernel directly; a second
-        # exchange only re-shuffles (A/B at sf0.1: 1.57s vs 1.83s)
+        # one consumer (the kernel) — the pre-partitioned synthesis feeds
+        # the kernel directly; a second exchange only re-shuffles (A/B at
+        # sf0.1: 1.57s vs 1.83s)
         spans, ExtractConfig(build_lines_from_words=True), repartition=False,
         has_mega=_mega_hint(spans, key=(sf_dir, "words"))
     )
@@ -5100,11 +5096,9 @@ def q_extract_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     spans = documents_to_spans(docs)
-    # two consumer branches (JVM passthrough + kernel): keep the pipeline's
-    # hash(doc_id) exchange — it materializes the pre-partitioned synthesis
-    # ONCE for both (runtime ReuseExchange), where repartition=False would
-    # re-evaluate the span synthesis per branch (A/B at sf0.1: 2.47s vs
-    # 2.91s; serial-synthesis old shape 3.33s)
+    # one consumer (the kernel; plus the mega split when the hint says so).
+    # This full-output face keeps the pipeline's hash(doc_id) exchange;
+    # dropping it, as extract_flagship / extract_words do, is unmeasured here.
     out = extract_pipeline(
         spans, has_mega=_mega_hint(spans, key=(sf_dir, "spans"))
     )
@@ -5121,7 +5115,9 @@ _MEGA_HINT_CACHE: dict[tuple, bool] = {}
 
 
 def _mega_hint(
-    spans_df: DataFrame, cutoff: int = 20_000, key: tuple | None = None
+    spans_df: DataFrame,
+    cutoff: int = ExtractConfig().mega_doc_span_cutoff,
+    key: tuple | None = None,
 ) -> bool:
     """Table-stats lookup for extract_pipeline's ``has_mega`` hint: on an
     Iceberg table this is a free column-max read; here it is one cheap agg

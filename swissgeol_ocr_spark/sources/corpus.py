@@ -95,14 +95,11 @@ def _pre_partition(docs: DataFrame) -> DataFrame:
     emits — murmur3(long) != murmur3(string), so the two exchanges do NOT
     co-partition and the pipeline's exchange can never be elided on the
     strength of this one; it exists purely to widen the synthesis stage.
-    Downstream-exchange rule (A/B-measured at sf0.1):
-    single-consumer pipelines (word/aggressive paths — no passthrough
-    branch) pass ``extract_pipeline(..., repartition=False)`` and keep
-    exactly one exchange (1.57s vs 1.83s); dual-consumer pipelines
-    (flagship: passthrough + kernel) KEEP the pipeline exchange — it
-    materializes the synthesis once for both branches via ReuseExchange,
-    where skipping it re-evaluates the synthesis per branch (2.47s vs
-    2.91s)."""
+    Downstream-exchange rule (A/B-measured at sf0.1 on the word path):
+    the kernel is the pipeline's one consumer of the synthesis (plus the
+    mega split when ``has_mega`` is set), so the flagship, word and
+    aggressive queries pass ``extract_pipeline(..., repartition=False)``
+    and keep exactly one exchange (1.57s vs 1.83s)."""
     return docs.repartition(
         docs.sparkSession.sparkContext.defaultParallelism, "doc_id"
     )
@@ -155,9 +152,8 @@ def documents_to_spans(
         "doc_id",
         spans.alias("spans"),
         (F.col("n_lines") + extra).cast("int").alias("n_spans"),
-        # routing hint consumed by plans.pipeline: layouts 1/2 are the only
-        # media-bearing classes, so the pipeline's born-digital passthrough
-        # predicate is a cheap scalar instead of an exists() over spans
+        # layouts 1/2 are the only media-bearing classes. The pipeline does
+        # not read this column; perfbench's route-share ledger does.
         F.col("layout").isin(1, 2).alias("has_media"),
     )
 
@@ -308,7 +304,6 @@ def documents_to_word_spans(
         "doc_id",
         spans.alias("spans"),
         (F.col("n_words") + F.col("n_pages")).cast("int").alias("n_spans"),
-        F.lit(True).alias("has_media"),
     )
 
 

@@ -953,9 +953,9 @@ def full_pipeline_writer(
     config: ExtractConfig | None = None,
     repartition: bool = True,
 ):
-    """foreachBatch writer running the FULL batch pipeline (JVM passthrough
-    for no-media docs + page-split/reassemble for mega docs) per
-    micro-batch. The stateless ``extract_stream`` sink cannot split a
+    """foreachBatch writer running the FULL batch pipeline (the kernel,
+    plus page-split/reassemble for mega docs) per micro-batch. The
+    stateless ``extract_stream`` sink cannot split a
     mega document — one above-cutoff doc would serialize its whole trigger
     into a single task — so feeds that can contain mega docs route through
     this writer instead (submit_extract_stream --mode batch).

@@ -60,7 +60,7 @@ def test_extract_pipeline_steady_state_shuffle_free(spark, sf_dir):
     """The 100 TB steady state — input pre-bucketed by hash(doc_id)
     (repartition=False) and table stats proving no mega docs
     (has_mega=False) — must plan with ZERO Exchange operators and no
-    page-split subtree: scan → passthrough/kernel union, nothing else."""
+    page-split subtree: scan → kernel, nothing else."""
     # no .limit() here — a global limit inserts its own SinglePartition
     # Exchange and would mask what this test pins
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -78,19 +78,17 @@ def test_pipeline_matches_local_kernel(spans_df):
 
 def test_mega_doc_split_is_exact(spans_df):
     """Page-split salting must be bit-identical to the unsplit kernel."""
-    # force everything through the mega path by lowering the cutoff (and
-    # disabling the JVM passthrough, which would otherwise intercept the
-    # no-media docs before the split)
+    # force everything through the mega path by lowering the cutoff
     cfg_split = ExtractConfig(mega_doc_span_cutoff=1)
     cfg_plain = ExtractConfig(mega_doc_span_cutoff=10**9)
     subset = spans_df.limit(15)
     split_out = {
         r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans_out]
-        for r in extract_pipeline(subset, cfg_split, use_jvm_passthrough=False).collect()
+        for r in extract_pipeline(subset, cfg_split).collect()
     }
     plain_out = {
         r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans_out]
-        for r in extract_pipeline(subset, cfg_plain, use_jvm_passthrough=False).collect()
+        for r in extract_pipeline(subset, cfg_plain).collect()
     }
     assert split_out == plain_out
 
@@ -113,37 +111,16 @@ def test_bench_mega_corpus_crosses_cutoff(spark, sf_dir):
     )
     split_out = {
         r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans_out]
-        for r in extract_pipeline(
-            subset, use_jvm_passthrough=False, has_mega=True
-        ).collect()
+        for r in extract_pipeline(subset, has_mega=True).collect()
     }
     plain_out = {
         r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans_out]
         for r in extract_pipeline(
-            subset,
-            ExtractConfig(mega_doc_span_cutoff=10**9),
-            use_jvm_passthrough=False,
+            subset, ExtractConfig(mega_doc_span_cutoff=10**9)
         ).collect()
     }
     assert split_out == plain_out
     spans.unpersist()
-
-
-def test_jvm_passthrough_matches_kernel_path(spans_df):
-    """The JVM-side born-digital passthrough must be bit-identical to the
-    Arrow kernel's fast path (operators/extract.py:90-95) — same spans, same
-    ordering for duplicate (page, offset) keys, same n_pages/status."""
-    subset = spans_df.limit(60)
-    cols = ["doc_id", "spans_out", "n_spans_in", "n_spans_out", "n_pages", "status"]
-    jvm = {
-        r.doc_id: r
-        for r in extract_pipeline(subset, use_jvm_passthrough=True).select(*cols).collect()
-    }
-    kern = {
-        r.doc_id: r
-        for r in extract_pipeline(subset, use_jvm_passthrough=False).select(*cols).collect()
-    }
-    assert jvm == kern
 
 
 def test_plan_construction_is_lazy(spark):
@@ -189,7 +166,7 @@ def test_mega_doc_id_with_hash_char(spark):
     cfg_split = ExtractConfig(mega_doc_span_cutoff=1)
     out = {
         r.doc_id: [(s.kind, s.text) for s in r.spans_out]
-        for r in extract_pipeline(df, cfg_split, use_jvm_passthrough=False).collect()
+        for r in extract_pipeline(df, cfg_split).collect()
     }
     assert set(out) == {"a#b", "a#c"}
     assert out["a#b"] == [("text", "x1"), ("text", "x2")]
@@ -238,7 +215,7 @@ def test_mega_split_adversarial_pages(spark):
         return {
             r.doc_id: ([(s.kind, s.text, s.media_ref, s.offset) for s in r.spans_out],
                        r.n_spans_in, r.n_spans_out, r.n_pages, r.status)
-            for r in extract_pipeline(df, cfg, use_jvm_passthrough=False).collect()
+            for r in extract_pipeline(df, cfg).collect()
         }
 
     split_out = collect(ExtractConfig(mega_doc_span_cutoff=1))
@@ -377,10 +354,12 @@ def test_python_corpus_twin_matches_spark(spark, sf_dir):
 
 
 def test_passthrough_adversarial_differential(spark):
-    """JVM passthrough vs kernel route on adversarial geometry: duplicate
-    (page, offset) sort keys (stability must come from array position),
-    empty spans arrays, and a NULL spans row (must be preserved as an
-    empty 'ok' doc, not silently dropped by the branch split)."""
+    """Born-digital route against an explicit spec on adversarial geometry:
+    each no-media document comes back as its spans sorted by
+    (page_no or 0, offset or 0, array position) — position breaks duplicate
+    keys — re-ranked 0..n-1, with n_pages = distinct coalesced pages.
+    Covers NULL offset/page_no, empty spans arrays, and a NULL spans row
+    (preserved as an empty 'ok' doc, never dropped)."""
     import random
 
     from swissgeol_ocr_spark.sources.corpus import spans_schema_ddl
@@ -393,9 +372,7 @@ def test_passthrough_adversarial_differential(spark):
         for i in range(n):
             spans.append((
                 "text", f"w{d}-{i}", "",
-                # NULL offset/page_no ~1 in 8: both branches must agree on
-                # ordering (kernel: salvage maps null→0; passthrough:
-                # coalesce(...,0) in the sort struct)
+                # NULL offset/page_no ~1 in 8: ordered as 0 (salvage rule)
                 None if rng.random() < 0.125 else rng.randint(0, 3),
                 None if rng.random() < 0.125 else rng.randint(0, 2),
                 float(rng.randint(0, 50)), float(rng.randint(0, 50)),
@@ -406,14 +383,21 @@ def test_passthrough_adversarial_differential(spark):
     rows.append(("nullspans", None))
     df = spark.createDataFrame(rows, f"doc_id string, spans {spans_schema_ddl()}")
 
-    def run(pt):
-        return {
-            r.doc_id: (r.status, r.n_spans_in, r.n_pages,
-                       [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans_out])
-            for r in extract_pipeline(df, use_jvm_passthrough=pt).collect()
-        }
+    def spec(spans):
+        # span tuple: (kind, text, media_ref, offset, page_no, ...)
+        order = sorted(
+            range(len(spans)),
+            key=lambda i: (spans[i][4] or 0, spans[i][3] or 0, i),
+        )
+        out = [(spans[i][0], spans[i][1], spans[i][2], rank)
+               for rank, i in enumerate(order)]
+        return ("ok", len(spans), len({s[4] or 0 for s in spans}), out)
 
-    jvm, kern = run(True), run(False)
-    assert jvm == kern
-    assert set(jvm) == {f"doc{d}" for d in range(30)} | {"nullspans"}
-    assert jvm["nullspans"] == ("ok", 0, 0, [])
+    got = {
+        r.doc_id: (r.status, r.n_spans_in, r.n_pages,
+                   [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans_out])
+        for r in extract_pipeline(df).collect()
+    }
+    expected = {doc_id: spec(spans or []) for doc_id, spans in rows}
+    assert got == expected
+    assert got["nullspans"] == ("ok", 0, 0, [])

@@ -20,6 +20,7 @@ documented behavior)."""
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -49,3 +50,21 @@ def test_no_cartesian_or_row_udf(spark, name):
     plan = _formatted_plan(fn(spark, SF))
     assert "CartesianProduct" not in plan, f"{name}: all-pairs corpus scan"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
+
+
+def test_extract_pipeline_single_route(spark):
+    """Every sub-cutoff document takes the one ``mapInArrow`` kernel (no-media
+    documents ride its Arrow gather): with no mega subtree the plan holds
+    exactly one MapInArrow and no Union or JVM ``sort_array`` — a second
+    born-digital route would show up here as both."""
+    from swissgeol_ocr_spark.plans.pipeline import extract_pipeline
+    from swissgeol_ocr_spark.sources.corpus import documents_to_spans
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = _formatted_plan(
+        extract_pipeline(documents_to_spans(docs), has_mega=False)
+    )
+    # one "(N) MapInArrow" detail header per plan node
+    assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == 1, plan
+    assert "Union" not in plan, plan
+    assert "sort_array" not in plan, plan

@@ -413,3 +413,29 @@ def test_native_matches_numpy_random():
     finally:
         ro._native_sort_lines = saved
     assert native_sort_lines(tied) == want
+
+
+def test_native_build_failure_logs_once(monkeypatch, tmp_path, caplog):
+    """A failed native build (here: gcc exits non-zero) must degrade to the
+    numpy path AND say so once per process, with gcc's stderr — not turn
+    silently into a ~5x slower kernel."""
+    import logging
+    import subprocess
+
+    from swissgeol_ocr_spark.operators import _native
+
+    def failing_run(cmd, **kwargs):
+        raise subprocess.CalledProcessError(1, cmd, stderr=b"gcc: fatal error: boom")
+
+    monkeypatch.delenv("SPARK_GRAFT_NO_NATIVE", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_NATIVE_DIR", str(tmp_path))
+    monkeypatch.setattr(_native.subprocess, "run", failing_run)
+    monkeypatch.setattr(_native, "_lib", None)  # restored after the test
+    with caplog.at_level(logging.WARNING, logger="swissgeol_ocr_spark.native"):
+        assert not _native.available()
+        assert not _native.available()
+        assert _native.native_sort_lines(np.zeros((2, 4))) is None
+    records = [r for r in caplog.records if r.name == "swissgeol_ocr_spark.native"]
+    assert len(records) == 1
+    assert "CalledProcessError" in records[0].getMessage()
+    assert "gcc: fatal error: boom" in records[0].getMessage()
