@@ -168,8 +168,8 @@ def make_dedup_clusters() -> None:
     set comes from DuckDB running SQL_MINHASH (the same oracle SQL the
     driver already hash-verifies against the Spark pair query), and the
     transitive closure is a 30-line pure-python union-find. cluster_id is
-    the smallest member doc_id — the invariant both Spark variants
-    (min-label propagation and large-star/small-star) converge to.
+    the smallest member doc_id — the invariant the Spark
+    large-star/small-star alternation converges to.
     """
     import duckdb
 

@@ -1,45 +1,82 @@
 #!/usr/bin/env python
-"""Print formatted physical plans for the PLANS.md evidence queries:
-media_features, dedup_simhash_pairs (wide), lsh_ann (multi-table
-multi-probe), ivf_ann_trained, dedup_band_stats, corpus_curation.
+"""Print or save formatted physical plans (``explain("formatted")``).
 
-dedup_clusters is deliberately NOT here: its star-CC loop localCheckpoints
-every round, so even constructing the final plan executes jobs — its scale
-argument is the per-round shape (two grouped aggregations on the node key)
-documented in PLANS.md and pinned by the chain/union-find tests.
+With no flags it prints the PLANS.md evidence queries to stdout:
+media_features, dedup_simhash_pairs, lsh_ann (multi-table multi-probe),
+ivf_ann_trained, dedup_band_stats, corpus_curation and the other audit
+queries listed in ``AUDIT``. ``--queries a,b,...`` picks the queries;
+``--out DIR`` writes one ``DIR/<query>.txt`` per query instead of
+printing, and without ``--queries`` it captures the ``bench.HEADLINE``
+suite (the plan-identity check of a refactor: run it on both trees and
+diff the directories).
 
-Usage: python scripts/plan_audit.py [sf_dir]
+dedup_clusters is deliberately NOT in ``AUDIT``: its star-CC loop
+localCheckpoints every round, so even constructing the final plan executes
+jobs — its scale argument is the per-round shape (two grouped aggregations
+on the node key) documented in PLANS.md and pinned by the chain/union-find
+tests.
+
+Usage: python scripts/plan_audit.py [sf_dir] [--queries a,b,...] [--out DIR]
 """
 
 from __future__ import annotations
 
+import argparse
+import contextlib
+import io
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+AUDIT = (
+    "media_features", "dedup_simhash_pairs", "lsh_ann", "ivf_ann_trained",
+    "dedup_band_stats", "corpus_curation", "dedup_lines", "pii_scrub",
+    "tfidf_topk", "temperature_mix", "lm_score", "dedup_substrings",
+    "corpus_stats", "winnow_fingerprint",
+)
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument(
+        "--queries",
+        help="comma-separated registry names (default: AUDIT, or "
+        "bench.HEADLINE with --out)",
+    )
+    ap.add_argument("--out", help="write DIR/<query>.txt instead of printing")
+    args = ap.parse_args()
+
     from pyspark.sql import SparkSession
 
+    from bench import HEADLINE
     from swissgeol_ocr_spark.plans.pipeline import configure_spark
     from swissgeol_ocr_spark.plans.queries import QUERIES
 
+    if args.queries:
+        names = [q for q in args.queries.split(",") if q]
+    else:
+        names = HEADLINE if args.out else AUDIT
     spark = configure_spark(
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
     ).getOrCreate()
-    for name in ("media_features", "dedup_simhash_pairs", "lsh_ann",
-                 "ivf_ann_trained", "dedup_band_stats", "corpus_curation",
-                 "dedup_lines", "pii_scrub", "tfidf_topk",
-                 "temperature_mix", "lm_score", "dedup_substrings",
-                 "corpus_stats", "winnow_fingerprint"):
+    if args.out:
+        os.makedirs(args.out, exist_ok=True)
+    for name in names:
         fn, _ = QUERIES[name]
-        print(f"\n{'=' * 70}\n{name}\n{'=' * 70}")
-        fn(spark, SF_DIR).explain("formatted")
+        df = fn(spark, args.sf_dir)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        if args.out:
+            with open(os.path.join(args.out, f"{name}.txt"), "w") as f:
+                f.write(buf.getvalue())
+        else:
+            print(f"\n{'=' * 70}\n{name}\n{'=' * 70}")
+            print(buf.getvalue(), end="")
     spark.stop()
 
 

@@ -267,81 +267,35 @@ def lsh_band_keys(
     )
 
 
-def simhash(digests: Column, bits: int = 16) -> Column:
-    """``bits``-bit SimHash over a materialized per-token ``md5_digests``
-    column, engine-portable.
-
-    Per token, md5 nibbles vote per bit position: positions 0..31 use the
-    top bit of nibble j (value ≥ 8 → +1, else −1); positions 32..61 reuse
-    nibble j−32's SECOND bit ((value mod 8) ≥ 4) — two independent vote
-    bits per nibble, so one materialized digest covers up to 62 fingerprint
-    bits with no extra hashing (HOF lambdas do no common-subexpression
-    elimination, so extra md5 calls are the cost that matters). Capped at
-    62 bits to keep the fingerprint a non-negative BIGINT in both engines
-    (bit 63 would flip the sign and break // banding arithmetic).
-    Returned as a non-negative BIGINT."""
-    assert bits <= 62
+def simhash16(digests: Column) -> Column:
+    """16-bit SimHash over a materialized per-token ``md5_digests`` column,
+    engine-portable (the round-1 fingerprint face): per token, bit j votes
+    on the top bit of md5 nibble j (value ≥ 8 → +1, else −1). Returned as
+    INT. The banded near-dup family runs the wider
+    ``simhash_wide_band_values`` scheme instead."""
     def _vote(j):
         # separate factory so the merge lambda keeps exactly 2 parameters
         # (PySpark derives the HOF arity from the signature)
-        if j < 32:
-            def pred(d):
-                return F.instr(F.lit("0123456789abcdef"), F.substring(d, j + 1, 1)) >= 9
-        else:
-            def pred(d):
-                return (
-                    F.pmod(
-                        F.instr(
-                            F.lit("0123456789abcdef"), F.substring(d, j - 32 + 1, 1)
-                        )
-                        - 1,
-                        F.lit(8),
-                    )
-                    >= 4
-                )
-
-        return lambda acc, d: acc + F.when(pred(d), F.lit(1)).otherwise(F.lit(-1))
+        return lambda acc, d: acc + F.when(
+            F.instr(F.lit("0123456789abcdef"), F.substring(d, j + 1, 1)) >= 9,
+            F.lit(1),
+        ).otherwise(F.lit(-1))
 
     bit_cols = []
-    for j in range(bits):
+    for j in range(16):
         votes = F.aggregate(digests, F.lit(0), _vote(j))
         bit_cols.append(F.when(votes > 0, F.lit(1 << j)).otherwise(F.lit(0)))
     out = bit_cols[0].cast("long")
     for c in bit_cols[1:]:
         out = out + c.cast("long")
-    return out
-
-
-def simhash16(digests: Column) -> Column:
-    """16-bit SimHash (the round-1 fingerprint face; see ``simhash``)."""
-    return simhash(digests, 16).cast("int")
-
-
-def simhash_band_keys(fingerprint: Column, bands: int = 4, band_bits: int = 8) -> Column:
-    """Band a SimHash fingerprint for the Hamming-neighbor join: band b's
-    key is 'b:' || the b-th ``band_bits``-bit slice. Two fingerprints within
-    Hamming distance ``bands - 1`` agree on at least one band (pigeonhole),
-    so the candidate join is an equi-join on this compact key — never an
-    all-pairs product. array<string> of length ``bands``."""
-    return F.array(
-        *[
-            F.concat_ws(
-                ":",
-                F.lit(str(b)),
-                F.pmod(
-                    F.shiftright(fingerprint, b * band_bits), F.lit(1 << band_bits)
-                ).cast("string"),
-            )
-            for b in range(bands)
-        ]
-    )
+    return out.cast("int")
 
 
 def simhash_wide_band_values(
     digests: Column, bands: int = 8, band_bits: int = 16
 ) -> Column:
-    """Corpus-scale SimHash: per-BAND fingerprint values (array<bigint>,
-    length ``bands``) for fingerprints WIDER than one signed BIGINT —
+    """The near-dup family's SimHash: per-BAND fingerprint values
+    (array<bigint>, length ``bands``) for every ``DedupConfig`` width —
     up to 128 bits from one materialized md5 digest per token.
 
     Vote scheme (documented for the DuckDB twin,
@@ -557,77 +511,8 @@ def quality_score(text: Column) -> Column:
     return F.round(0.4 * length_term + 0.2 * stop_term + 0.4 * punct_pen, 6)
 
 
-def connected_components(
-    vertices: DataFrame, edges: DataFrame, max_iter: int = 20, strict: bool = True
-) -> DataFrame:
-    """Connected components by iterative min-label propagation — the
-    dedup-clustering step over near-dup candidate pairs.
-
-    vertices(id), edges(src, dst) → (id, component) where component is the
-    smallest member id. Each round joins labels across edges and keeps the
-    min; converges in O(component diameter) rounds (near-dup clusters are
-    shallow). Every round is one shuffle on the edge key; the label frame
-    is cached per round and the loop stops at fixpoint (a driver-side
-    count — the canonical iterative-algorithm shape in Spark).
-    """
-    from pyspark.sql import functions as Fn
-
-    both = edges.select("src", "dst").union(
-        edges.select(Fn.col("dst").alias("src"), Fn.col("src").alias("dst"))
-    )
-    labels = vertices.select(Fn.col("id"), Fn.col("id").alias("component")).cache()
-    # max_iter productive rounds + 1: convergence is only observable as a
-    # zero-change round, so a component whose diameter is EXACTLY max_iter
-    # needs one extra (cheap, no-op) round to prove the fixpoint — without
-    # it, strict mode would discard an already-correct result
-    for _ in range(max_iter + 1):
-        neighbor_min = (
-            both.join(labels, both.dst == labels.id)
-            .groupBy("src")
-            .agg(Fn.min("component").alias("nbr_component"))
-        )
-        # localCheckpoint truncates the round-over-round lineage (the nested
-        # plan otherwise grows every iteration and eventually dominates
-        # planning time / driver heap)
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
-                "id",
-                Fn.least(
-                    Fn.col("component"),
-                    Fn.coalesce(Fn.col("nbr_component"), Fn.col("component")),
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(Fn.col("n.component") != Fn.col("o.component"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # min-label propagation needs O(component diameter) rounds; on a
-        # chain longer than max_iter the labels are silently WRONG (one
-        # real cluster split across several ids) — fail loudly instead of
-        # returning them. Callers that genuinely want partial labels (or
-        # long chains) should pass strict=False or use
-        # connected_components_star (O(log² n) rounds on any graph).
-        if strict:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter + 1} rounds "
-                "(component diameter exceeds max_iter); use "
-                "connected_components_star or raise max_iter"
-            )
-    return labels
-
-
 def connected_components_star(
-    vertices: DataFrame, edges: DataFrame, max_iter: int = 50, strict: bool = True
+    vertices: DataFrame, edges: DataFrame, max_iter: int = 50
 ) -> DataFrame:
     """Connected components by large-star / small-star alternation
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -640,7 +525,8 @@ def connected_components_star(
     smallest member id. Each round is two grouped aggregations on the
     node key (one shuffle each); the driver-side loop stops when the edge
     set reaches the star fixpoint (every edge points directly at its
-    component minimum).
+    component minimum). Not reaching it within ``max_iter`` rounds raises
+    rather than return partial (silently wrong) labels.
     """
     from pyspark.sql import functions as Fn
 
@@ -680,7 +566,10 @@ def connected_components_star(
         return dedup(out)
 
     e = dedup(edges.select("src", "dst"))
-    for _ in range(max_iter + 1):  # +1 verification round, see connected_components
+    # max_iter productive rounds + 1: convergence is only observable as a
+    # zero-change round, so a graph that needs EXACTLY max_iter rounds
+    # needs one extra (cheap, no-op) round to prove the fixpoint
+    for _ in range(max_iter + 1):
         # localCheckpoint truncates the plan lineage each round — without it
         # the nested round-over-round DAG grows exponentially and the driver
         # OOMs while planning (cluster jobs should point
@@ -693,12 +582,11 @@ def connected_components_star(
         if changed == 0:
             break
     else:
-        if strict:  # same silent-wrong-labels guard as connected_components
-            raise RuntimeError(
-                f"connected_components_star did not converge in {max_iter + 1} "
-                "rounds; raise max_iter (O(log² n) expected — this is a bug "
-                "or a pathological graph)"
-            )
+        raise RuntimeError(
+            f"connected_components_star did not converge in {max_iter + 1} "
+            "rounds; raise max_iter (O(log² n) expected — this is a bug "
+            "or a pathological graph)"
+        )
     roots = e.select(Fn.col("src").alias("id"), Fn.col("dst").alias("component"))
     return (
         vertices.join(roots, "id", "left")

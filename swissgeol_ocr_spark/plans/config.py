@@ -66,11 +66,13 @@ class DedupConfig:
       per band. THIS is what must grow with corpus size — at 10^12 docs an
       8-bit band has only 256 buckets, so each bucket goes quadratic.
 
-    Widths ≤ 62 bits run as one non-negative BIGINT fingerprint; wider
-    settings (up to 128 bits — one md5 digest's worth of vote bits) run as
-    TWO BIGINT halves with band keys derived before packing
+    Every width runs as TWO BIGINT halves, bands 0..bands/2−1 in the low
+    half, with band keys derived before packing
     (functions/textops.simhash_wide_band_values / pack_band_half), so
-    nothing caps the bucket count at the single-BIGINT sign bit anymore.
+    nothing caps the bucket count at a single BIGINT's sign bit. That
+    layout holds an even number of bands ≥ 2 with at most 64 bits per
+    half (128 in all — one md5 digest's worth of vote bits);
+    ``__post_init__`` rejects any other setting.
 
     Default: the corpus-scale setting — 8 bands × 16 bits = 128-bit
     fingerprints, complete for d ≤ 7 AND 65,536 buckets per band (the
@@ -91,6 +93,15 @@ class DedupConfig:
     # kill the stage; `dedup_band_stats.n_over_cap` counts the routed
     # buckets so the drop is never silent.
     band_bucket_cap: int = 200
+
+    def __post_init__(self) -> None:
+        bands, band_bits = self.simhash_bands, self.simhash_band_bits
+        if bands < 2 or bands % 2 or (bands // 2) * band_bits > 64:
+            raise ValueError(
+                f"DedupConfig(simhash_bands={bands}, simhash_band_bits="
+                f"{band_bits}): the two-BIGINT SimHash layout needs an even "
+                "band count >= 2 and at most 64 bits per half"
+            )
 
     @property
     def simhash_bits(self) -> int:

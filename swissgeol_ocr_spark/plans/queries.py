@@ -949,13 +949,7 @@ def q_extract_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = run_stream_to_parquet(spark, in_dir, out_dir, f"{work}/ckpt")
     _drain(q)
     out = spark.read.parquet(out_dir)
-    return out.select("doc_id", F.explode("spans_out").alias("s")).select(
-        "doc_id",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-    )
+    return _span_rows(out)
 
 
 def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1577,32 +1571,14 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", textops.simhash16(F.col("dg")).alias("simhash"))
 
 
-def _simhash_bit_terms(bits: int) -> str:
-    """DuckDB twin of textops.simhash: bit j < 32 votes on the top bit of
-    md5 nibble j (value ≥ 8); bit j ≥ 32 reuses nibble j−32's second bit
-    ((value mod 8) ≥ 4) — two vote bits per nibble, up to 62 bits from one
-    digest."""
-    terms = []
-    for j in range(bits):
-        if j < 32:
-            pred = f"instr('0123456789abcdef', substr(d, {j + 1}, 1)) >= 9"
-        else:
-            pred = (
-                f"(instr('0123456789abcdef', substr(d, {j - 32 + 1}, 1)) - 1) % 8 >= 4"
-            )
-        terms.append(
-            "(CASE WHEN list_sum(list_transform(dgs, d -> CASE WHEN "
-            f"{pred} "
-            f"THEN 1 ELSE -1 END)) > 0 THEN CAST({1 << j} AS BIGINT) ELSE 0 END)"
-        )
-    return " + ".join(terms)
-
-
-def _simhash_band_terms(bands: int, band_bits: int) -> str:
-    """DuckDB twin of textops.simhash_band_keys over a non-negative fp."""
-    return ",\n    ".join(
-        f"'{b}:' || CAST((fp // {1 << (b * band_bits)}) % {1 << band_bits} AS VARCHAR)"
-        for b in range(bands)
+def _simhash16_terms() -> str:
+    """DuckDB twin of textops.simhash16: bit j votes on the top bit of md5
+    nibble j (value ≥ 8)."""
+    return " + ".join(
+        "(CASE WHEN list_sum(list_transform(dgs, d -> CASE WHEN "
+        f"instr('0123456789abcdef', substr(d, {j + 1}, 1)) >= 9 "
+        f"THEN 1 ELSE -1 END)) > 0 THEN CAST({1 << j} AS BIGINT) ELSE 0 END)"
+        for j in range(16)
     )
 
 
@@ -1612,7 +1588,7 @@ WITH dg AS (
          list_transform(string_split(text, ' '), t -> md5(t)) AS dgs
   FROM documents
 )
-SELECT doc_id, CAST({_simhash_bit_terms(16)} AS INT) AS simhash
+SELECT doc_id, CAST({_simhash16_terms()} AS INT) AS simhash
 FROM dg
 """
 
@@ -1629,15 +1605,16 @@ def q_dedup_simhash_pairs(
     fingerprints within Hamming distance bands−1 agree on ≥1 band
     (pigeonhole), so candidates meet in an equi-join on the compact band
     key — one shuffle, never an all-pairs product — and are then verified
-    with an exact two-half popcount. The SQL oracle is generated from the
-    SAME config values by ``sql_dedup_simhash_pairs``, so ANY setting can
-    be paired with its oracle (configs ≤ 62 bits take the legacy
-    single-BIGINT path).
+    with an exact two-half popcount. Every DedupConfig width runs this one
+    two-half representation (``DedupConfig`` rejects widths it cannot
+    hold). The SQL oracle is generated from the SAME config values by
+    ``sql_dedup_simhash_pairs``, so ANY setting can be paired with its
+    oracle.
 
-    Round-5 hardening (both representations): exact duplicates collapse to
-    one representative before fingerprinting (``textops.exact_collapse`` —
-    a k-wide boilerplate cluster costs O(1) banded rows, not O(k) rows
-    minting k² in-bucket candidates) and band buckets whose representative
+    Round-5 hardening: exact duplicates collapse to one representative
+    before fingerprinting (``textops.exact_collapse`` — a k-wide
+    boilerplate cluster costs O(1) banded rows, not O(k) rows minting k²
+    in-bucket candidates) and band buckets whose representative
     population exceeds ``cfg.band_bucket_cap`` are routed out of the join
     (``textops.cap_band_buckets``; counted by dedup_band_stats.n_over_cap).
     a_dups/b_dups carry the representatives' exact multiplicities.
@@ -1646,7 +1623,7 @@ def q_dedup_simhash_pairs(
     (/root/reference/ocr/textract/textract.py:120-131) at north-rule
     corpus scale."""
     cfg = config or _DEDUP_CFG
-    bits, bands, band_bits = cfg.simhash_bits, cfg.simhash_bands, cfg.simhash_band_bits
+    bands, band_bits = cfg.simhash_bands, cfg.simhash_band_bits
     reps = textops.exact_collapse(
         _t(spark, sf_dir, "documents").select("doc_id", "text")
     )
@@ -1655,44 +1632,9 @@ def q_dedup_simhash_pairs(
     docs = textops.pin_width(reps, "doc_id").select(
         "doc_id", "n_dups", textops.md5_digests(F.split("text", " ")).alias("dg")
     )
-    if bits <= 62:
-        fp = docs.select(
-            "doc_id", "n_dups", textops.simhash(F.col("dg"), bits).alias("fp")
-        )
-        banded = fp.select(
-            "doc_id", "n_dups", "fp",
-            # explode_outer: see q_dedup_minhash_lsh — keeps the inferred
-            # size()>0 filter from inlining the 56-aggregate fingerprint
-            F.explode_outer(
-                textops.simhash_band_keys(F.col("fp"), bands=bands, band_bits=band_bits)
-            ).alias("bk"),
-        )
-        banded = textops.cap_band_buckets(banded, cfg.band_bucket_cap, "bk")
-        cand = (
-            banded.alias("a")
-            .join(
-                banded.alias("b"),
-                (F.col("a.bk") == F.col("b.bk")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("a_id"),
-                F.col("b.doc_id").alias("b_id"),
-                F.col("a.n_dups").alias("a_dups"),
-                F.col("b.n_dups").alias("b_dups"),
-                F.col("a.fp").alias("fa"),
-                F.col("b.fp").alias("fb"),
-            )
-            .distinct()
-        )
-        ham = F.bit_count(F.col("fa").bitwiseXOR(F.col("fb"))).cast("int")
-        return cand.select(
-            "a_id", "b_id", "a_dups", "b_dups", ham.alias("hamming")
-        ).filter(F.col("hamming") <= bands - 1)
-
-    # wide path: > 62 bits can't live in one signed BIGINT — band values
-    # come out of ONE aggregate pass, band keys are derived BEFORE packing
-    # (no shift arithmetic ever touches a possibly-negative half), and the
-    # exact verify popcounts the two halves
+    # band values come out of ONE aggregate pass, band keys are derived
+    # BEFORE packing (no shift arithmetic ever touches a possibly-negative
+    # half), and the exact verify popcounts the two halves
     packed = _simhash_wide_packed(docs, bands, band_bits, extra=("n_dups",))
     # explode_outer: the inferred size()>0 filter would otherwise push
     # below the packing projects, inlining the vote aggregate ~16×/row
@@ -1727,9 +1669,10 @@ def q_dedup_simhash_pairs(
 def _simhash_wide_packed(
     docs: DataFrame, bands: int, band_bits: int, extra: tuple[str, ...] = ()
 ) -> DataFrame:
-    """(doc_id, *extra, lo, hi, keys) — the two-BIGINT-half wide
-    fingerprint relation over a materialized ``dg`` md5-digest column
-    (shared by the pairs query and the band-stats metrics); ``extra``
+    """(doc_id, *extra, lo, hi, keys) — the two-BIGINT-half fingerprint
+    relation (every DedupConfig width) over a materialized ``dg``
+    md5-digest column (shared by the pairs query and the band-stats
+    metrics); ``extra``
     names passthrough columns (e.g. the exact-collapse multiplicity).
     Band values are materialized as real columns between the aggregate and
     the packing so the one aggregate pass runs exactly once per row
@@ -1815,39 +1758,10 @@ def sql_dedup_simhash_pairs(cfg: "DedupConfig | None" = None) -> str:
     """Generate the DuckDB oracle for ``q_dedup_simhash_pairs`` from the
     SAME config the Spark query runs with — any setting gets matching
     oracle coverage (the round-3 advice: the oracle used to be frozen at
-    import time from the default config). Configs ≤ 62 bits emit the
-    legacy single-BIGINT twin; wider ones the two-BIGINT-half twin."""
+    import time from the default config): the two-BIGINT-half twin."""
     cfg = cfg or _DEDUP_CFG
-    bits, bands, band_bits = cfg.simhash_bits, cfg.simhash_bands, cfg.simhash_band_bits
+    bands, band_bits = cfg.simhash_bands, cfg.simhash_band_bits
     cap = cfg.band_bucket_cap
-    if bits <= 62:
-        return f"""
-WITH reps AS (
-  {textops.SQL_EXACT_COLLAPSE}
-), dg AS (
-  SELECT doc_id, n_dups,
-         list_transform(string_split(text, ' '), t -> md5(t)) AS dgs
-  FROM reps
-), fp AS (
-  SELECT doc_id, n_dups, CAST({_simhash_bit_terms(bits)} AS BIGINT) AS fp
-  FROM dg
-), banded AS (
-  SELECT doc_id, n_dups, fp, unnest([
-    {_simhash_band_terms(bands, band_bits)}]) AS bk
-  FROM fp
-), admitted AS (
-  SELECT bk FROM banded GROUP BY bk HAVING count(*) <= {cap}
-), kept AS (
-  SELECT banded.* FROM banded JOIN admitted USING (bk)
-), cand AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
-         a.n_dups AS a_dups, b.n_dups AS b_dups, a.fp AS fa, b.fp AS fb
-  FROM kept a JOIN kept b ON a.bk = b.bk AND a.doc_id < b.doc_id
-)
-SELECT a_id, b_id, a_dups, b_dups,
-       CAST(bit_count(xor(fa, fb)) AS INT) AS hamming
-FROM cand WHERE bit_count(xor(fa, fb)) <= {bands - 1}
-"""
     assert bands % 2 == 0 and (bands // 2) * band_bits <= 64, cfg
     half = bands // 2
     band_defs = ",\n         ".join(
@@ -1896,13 +1810,10 @@ def dedup_band_stats_relation(
     spark: SparkSession, sf_dir: str, config: "DedupConfig | None" = None
 ) -> DataFrame:
     """The band-stats relation for a given config (the query face below
-    runs it at the default). The simhash leg mirrors the pairs query's
-    representation branch — legacy single-BIGINT banding for configs ≤ 62
-    bits, wide two-half banding otherwise — so these metrics always
-    describe the SAME bucket distribution the pairs join shuffles on
-    (round-4 advice: deriving stats from the wide scheme unconditionally
-    would mis-describe a narrowed config and hit the wide path's
-    bands%2==0 assert)."""
+    runs it at the default). The simhash leg bands through the same
+    ``_simhash_wide_packed`` relation as the pairs query, so these metrics
+    always describe the SAME bucket distribution the pairs join shuffles
+    on, at any DedupConfig width."""
     cfg = config or _DEDUP_CFG
     cap = cfg.band_bucket_cap
     reps = textops.exact_collapse(
@@ -1911,23 +1822,9 @@ def dedup_band_stats_relation(
     docs = reps.select(
         "doc_id", textops.md5_digests(F.split("text", " ")).alias("dg")
     )
-    if cfg.simhash_bits <= 62:
-        fp = docs.select(
-            "doc_id", textops.simhash(F.col("dg"), cfg.simhash_bits).alias("fp")
-        )
-        sim_banded = fp.select(
-            F.explode_outer(
-                textops.simhash_band_keys(
-                    F.col("fp"),
-                    bands=cfg.simhash_bands,
-                    band_bits=cfg.simhash_band_bits,
-                )
-            ).alias("bk")
-        )
-    else:
-        sim_banded = _simhash_wide_packed(
-            docs, cfg.simhash_bands, cfg.simhash_band_bits
-        ).select(F.explode_outer("keys").alias("bk"))
+    sim_banded = _simhash_wide_packed(
+        docs, cfg.simhash_bands, cfg.simhash_band_bits
+    ).select(F.explode_outer("keys").alias("bk"))
     sim = textops.band_population_stats(sim_banded, "simhash", cap=cap)
 
     mh_banded = textops.minhash_band_relation(reps).select(
@@ -4971,12 +4868,11 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering: connected components over the MinHash-LSH
     candidate pairs; cluster_id = smallest member doc_id.
 
-    The registered implementation is the large-star/small-star alternation
+    The implementation is the large-star/small-star alternation
     (textops.connected_components_star) — O(log² n) rounds on ANY graph, so
-    an adversarial chain of pairwise-similar documents can't force
-    O(diameter) driver-side iterations the way plain min-label propagation
-    (textops.connected_components, kept for shallow-cluster workloads)
-    would. Oracle: golden parquet computed by a pure-python union-find over
+    an adversarial chain of pairwise-similar documents can't force the
+    O(diameter) driver-side iterations plain min-label propagation would
+    need. Oracle: golden parquet computed by a pure-python union-find over
     the DuckDB-generated MinHash pair list (scripts/make_golden.py) — the
     edge set itself is independently hash-verified by the
     ``dedup_minhash_lsh`` oracle.
@@ -5044,13 +4940,7 @@ def q_extract_aggressive(spark: SparkSession, sf_dir: str) -> DataFrame:
         spans, ExtractConfig(use_aggressive_strategy=True), repartition=False,
         has_mega=_mega_hint(spans, key=(sf_dir, "spans"))
     )
-    return out.select("doc_id", F.explode("spans_out").alias("s")).select(
-        "doc_id",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-    )
+    return _span_rows(out)
 
 
 def q_extract_words(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5072,13 +4962,7 @@ def q_extract_words(spark: SparkSession, sf_dir: str) -> DataFrame:
         spans, ExtractConfig(build_lines_from_words=True), repartition=False,
         has_mega=_mega_hint(spans, key=(sf_dir, "words"))
     )
-    return out.select("doc_id", F.explode("spans_out").alias("s")).select(
-        "doc_id",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-    )
+    return _span_rows(out)
 
 
 def q_extract_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5096,12 +4980,18 @@ def q_extract_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     spans = documents_to_spans(docs)
-    # one consumer (the kernel; plus the mega split when the hint says so).
-    # This full-output face keeps the pipeline's hash(doc_id) exchange;
-    # dropping it, as extract_flagship / extract_words do, is unmeasured here.
+    # one consumer (the kernel; plus the mega split when the hint says so),
+    # same rule as extract_flagship — no second exchange
     out = extract_pipeline(
-        spans, has_mega=_mega_hint(spans, key=(sf_dir, "spans"))
+        spans, repartition=False,
+        has_mega=_mega_hint(spans, key=(sf_dir, "spans"))
     )
+    return _span_rows(out)
+
+
+def _span_rows(out: DataFrame) -> DataFrame:
+    """One (doc_id, kind, text, media_ref, offset) row per output span —
+    the exploded span-sequence surface of the extract faces."""
     return out.select("doc_id", F.explode("spans_out").alias("s")).select(
         "doc_id",
         F.col("s.kind").alias("kind"),

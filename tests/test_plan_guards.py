@@ -68,3 +68,16 @@ def test_extract_pipeline_single_route(spark):
     assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == 1, plan
     assert "Union" not in plan, plan
     assert "sort_array" not in plan, plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["extract_flagship", "extract_aggressive", "extract_words", "extract_sequence"],
+)
+def test_extract_faces_single_exchange(spark, name):
+    """Each extract face has one consumer of the spans synthesis (the
+    kernel), so the synthesis' own width exchange feeds it directly: a
+    second hash(doc_id) exchange before the kernel would only re-shuffle."""
+    fn, _ = QUERIES[name]
+    plan = _formatted_plan(fn(spark, SF))
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1, plan

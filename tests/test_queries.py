@@ -145,16 +145,16 @@ def test_jaccard_hot_shingle_cap(spark, tmp_path):
 def test_simhash_band_pigeonhole():
     """Any two fingerprints within Hamming distance bands−1 must share at
     least one band key (the join-completeness guarantee behind
-    dedup_simhash_pairs), at BOTH the narrow 32-bit/4×8 setting and the
-    registered wide setting from DedupConfig (56-bit/8×7 → complete d≤7)."""
+    dedup_simhash_pairs), at the 32-bit/4×8 and 56-bit/8×7 settings and at
+    the registered 128-bit default from DedupConfig."""
     import random
 
     from swissgeol_ocr_spark.plans.config import DedupConfig
 
     cfg = DedupConfig()
     settings = [
-        (32, 4, 8),           # legacy narrow single-BIGINT setting
-        (56, 8, 7),           # the round-3 single-BIGINT wide setting
+        (32, 4, 8),
+        (56, 8, 7),           # the round-3 default
         (cfg.simhash_bits, cfg.simhash_bands, cfg.simhash_band_bits),
     ]
     assert (cfg.simhash_bands, cfg.simhash_band_bits) == (8, 16)  # corpus-scale default
@@ -281,49 +281,64 @@ def test_connected_components_star_adversarial(spark):
     assert got == truth
 
 
-def test_connected_components_strict_raises_on_nonconvergence(spark):
-    """Min-label propagation on a chain longer than max_iter must FAIL
-    loudly (silently-wrong partial labels were the round-3 review finding);
-    strict=False keeps the old partial-result behavior, and the star
-    variant converges on the same input."""
-    import pytest as _pytest
-
-    from swissgeol_ocr_spark.functions.textops import (
-        connected_components,
-        connected_components_star,
-    )
+def test_connected_components_star_raises_on_nonconvergence(spark):
+    """A star CC that cannot reach its fixpoint within max_iter rounds must
+    FAIL loudly rather than return partial (silently wrong) labels — the
+    round-3 review finding; its full convergence on chains is pinned by
+    test_connected_components_star_adversarial."""
+    from swissgeol_ocr_spark.functions.textops import connected_components_star
 
     n = 12
     verts = spark.createDataFrame([(f"v{i:02d}",) for i in range(n)], "id string")
     chain = spark.createDataFrame(
         [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(n - 1)], "src string, dst string"
     )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(verts, chain, max_iter=3)
-    partial = connected_components(verts, chain, max_iter=3, strict=False)
-    assert partial.count() == n  # partial labels, explicitly requested
-    full = {r.id: r.component for r in connected_components_star(verts, chain).collect()}
-    assert set(full.values()) == {"v00"}
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components_star(verts, chain, max_iter=0)
+
+
+def test_dedup_config_rejects_widths_the_two_half_layout_cannot_hold():
+    """DedupConfig is the one statement of the supported SimHash widths: an
+    even band count ≥ 2 with at most 64 bits per BIGINT half."""
+    from swissgeol_ocr_spark.plans.config import DedupConfig
+
+    for bands, band_bits in [(7, 8), (0, 16), (4, 33)]:
+        with pytest.raises(ValueError):
+            DedupConfig(bands, band_bits)
+    assert DedupConfig(2, 64).simhash_bits == 128
 
 
 def test_simhash_scale_knob_cross_setting_consistency(spark):
-    """Exercise the DedupConfig scale lever end-to-end, on BOTH fingerprint
-    representations: (a) the corpus-scale 128-bit default (8×16, d ≤ 7
-    complete) rebanded as 4×32 is d ≤ 3 complete over the SAME fingerprint,
-    so its pair set must EQUAL the default's pairs filtered to hamming ≤ 3;
-    (b) the same relation between the legacy single-BIGINT 8×7 and 4×14
-    settings over the 56-bit fingerprint."""
+    """Exercise the DedupConfig scale lever end-to-end at two widths: (a)
+    the corpus-scale 128-bit default (8×16, d ≤ 7 complete) rebanded as
+    4×32 is d ≤ 3 complete over the SAME fingerprint, so its pair set must
+    EQUAL the default's pairs filtered to hamming ≤ 3; (b) the same
+    relation between the 8×7 and 4×14 settings over a 56-bit fingerprint.
+    Every setting must also equal its generated DuckDB oracle."""
     from swissgeol_ocr_spark.plans.config import DedupConfig
-    from swissgeol_ocr_spark.plans.queries import q_dedup_simhash_pairs
+    from swissgeol_ocr_spark.plans.queries import (
+        q_dedup_simhash_pairs,
+        sql_dedup_simhash_pairs,
+    )
+
+    cols = ["a_id", "b_id", "a_dups", "b_dups", "hamming"]
+
+    def pairs(cfg):
+        rows = q_dedup_simhash_pairs(spark, SF_DIR, config=cfg).collect()
+        got = {tuple(r[c] for c in cols) for r in rows}
+        oracle = _duck(sql_dedup_simhash_pairs(cfg))[cols]
+        assert len(rows) == len(oracle), cfg
+        assert got == set(oracle.itertuples(index=False, name=None)), cfg
+        return got
 
     for wide_cfg, narrow_cfg in [
         (None, DedupConfig(simhash_bands=4, simhash_band_bits=32)),     # 128-bit
         (DedupConfig(8, 7), DedupConfig(simhash_bands=4, simhash_band_bits=14)),  # 56-bit
     ]:
-        wide = q_dedup_simhash_pairs(spark, SF_DIR, config=wide_cfg).collect()
-        narrow = q_dedup_simhash_pairs(spark, SF_DIR, config=narrow_cfg).collect()
-        wide_d3 = {(r.a_id, r.b_id, r.hamming) for r in wide if r.hamming <= 3}
-        narrow_set = {(r.a_id, r.b_id, r.hamming) for r in narrow}
+        wide_d3 = {
+            (a, b, h) for a, b, _, _, h in pairs(wide_cfg) if h <= 3
+        }
+        narrow_set = {(a, b, h) for a, b, _, _, h in pairs(narrow_cfg)}
         assert narrow_set == wide_d3, (wide_cfg, narrow_cfg)
 
 
