@@ -10,6 +10,11 @@
                          cross product. Hyperplane components are pure
                          arithmetic in the vector index (engine-portable —
                          the DuckDB oracle reproduces them exactly).
+* ``ivf_train``        — IVF coarse quantization: a deterministic
+                         first-n-by-id codebook refined by ``iters`` Lloyd
+                         rounds (``iters=0`` keeps the first-n codebook);
+                         ``ivf_assign_trained`` / ``ivf_ann_trained``
+                         assign and probe against it.
 
 All math is cast to double before summing so Spark (JVM) and DuckDB agree
 bit-for-bit at the rounding precision used by the driver contract.
@@ -106,42 +111,29 @@ def lsh_bucket(vec: Column, n_planes: int = 8, plane_offset: int = 0) -> Column:
     return bucket
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    n_lists: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+QUANT = 1_000_000.0  # integer quantization for exact cross-engine means
+
+
+def _rank_lists(
+    embeddings: DataFrame, cents: DataFrame, vec_col: str, id_col: str
 ) -> DataFrame:
-    """IVF coarse quantization with a deterministic codebook: the centroids
-    are the first ``n_lists`` stored vectors by id (no iterative k-means —
-    reproducible in any engine); each vector joins the list of its
-    max-cosine centroid. At fleet scale the list id is the partition key:
-    a query probes one list instead of the corpus."""
-    cents = (
-        embeddings.orderBy(id_col)
-        .limit(n_lists)
-        .select(
-            F.col(id_col).alias("_cent_rank"),
-            F.col(vec_col).alias("_cvec"),
-        )
-    )
-    scored = embeddings.crossJoin(F.broadcast(cents)).select(
-        id_col,
-        vec_col,
-        "_cent_rank",
-        F.round(cosine(F.col(vec_col), F.col("_cvec")), 9).alias("_csim"),
-    )
+    """Every (vector, centroid) pair — (id, _v = the vector as doubles) ×
+    ``cents`` (cent_rank, cvec) — with ``_rn`` = the centroid's rank by
+    cosine (rounded to 6dp: a float sum's last bits differ by summation
+    order across engines), ties broken on cent_rank. ``_rn`` = 1 is the
+    vector's list; one builder for the Lloyd rounds and the final
+    assignment."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(id_col).orderBy(F.desc("_csim"), F.asc("_cent_rank"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(id_col, vec_col, F.col("_cent_rank").alias("ivf_list"))
+    base = embeddings.select(
+        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("_v")
     )
-
-
-QUANT = 1_000_000.0  # integer quantization for exact cross-engine means
+    scored = base.crossJoin(F.broadcast(cents)).select(
+        id_col, "_v", "cent_rank",
+        F.round(cosine(F.col("_v"), F.col("cvec")), 6).alias("_csim"),
+    )
+    w = Window.partitionBy(id_col).orderBy(F.desc("_csim"), F.asc("cent_rank"))
+    return scored.withColumn("_rn", F.row_number().over(w))
 
 
 def ivf_train(
@@ -154,6 +146,7 @@ def ivf_train(
     """Deterministic Lloyd-trained IVF codebook: start from the first
     ``n_lists`` vectors by id, then run ``iters`` k-means rounds (assign by
     max cosine, recenter on the member mean). Returns (cent_rank, cvec).
+    ``iters=0`` is the untrained first-n codebook.
 
     Cross-engine exactness: a float mean's value depends on summation
     order, which neither Spark nor DuckDB guarantees — so components are
@@ -169,19 +162,9 @@ def ivf_train(
             F.transform(vec_col, lambda x: x.cast("double")).alias("cvec"),
         )
     )
-    base = embeddings.select(
-        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("_v")
-    )
-    from pyspark.sql import Window
-
     for _ in range(iters):
-        scored = base.crossJoin(F.broadcast(cents)).select(
-            id_col, "_v", "cent_rank",
-            F.round(cosine(F.col("_v"), F.col("cvec")), 6).alias("_csim"),
-        )
-        w = Window.partitionBy(id_col).orderBy(F.desc("_csim"), F.asc("cent_rank"))
         assigned = (
-            scored.withColumn("_rn", F.row_number().over(w))
+            _rank_lists(embeddings, cents, vec_col, id_col)
             .filter(F.col("_rn") == 1)
             .select("cent_rank", "_v")
         )
@@ -226,17 +209,7 @@ def ivf_assign_trained(
     (scripts/ann_curve.py) so measured scan fractions describe exactly the
     lists the search probes."""
     cents = ivf_train(embeddings, n_lists, iters, vec_col, id_col)
-    base = embeddings.select(
-        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("_v")
-    )
-    from pyspark.sql import Window
-
-    scored = base.crossJoin(F.broadcast(cents)).select(
-        id_col, "_v", "cent_rank",
-        F.round(cosine(F.col("_v"), F.col("cvec")), 6).alias("_csim"),
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("_csim"), F.asc("cent_rank"))
-    ranked = scored.withColumn("_rn", F.row_number().over(w))
+    ranked = _rank_lists(embeddings, cents, vec_col, id_col)
     assigned = ranked.filter(F.col("_rn") == 1).select(
         id_col, "_v", F.col("cent_rank").alias("ivf_list")
     )
@@ -286,31 +259,6 @@ def ivf_ann_trained(
         .select(
             F.col(id_col),
             F.round(cosine(F.col("_v"), F.col("_qvec")), 6).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def ivf_ann(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    n_lists: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Approximate top-k: exact scoring restricted to the query's IVF list."""
-    assigned = ivf_assign(embeddings, n_lists, vec_col, id_col)
-    q = assigned.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("_qvec"), F.col("ivf_list").alias("_qlist")
-    )
-    return (
-        assigned.filter(F.col(id_col) != query_vec_id)
-        .join(F.broadcast(q), F.col("ivf_list") == F.col("_qlist"))
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("_qvec")), 6).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.col(id_col))
         .limit(k)

@@ -143,8 +143,3 @@ def _join_words_fast(
         if pos < last and x0l[order[pos + 1]] > x1l[i]:
             parts.append(" ")
     return "".join(parts)
-
-
-def block_text(line_texts: list[str]) -> str:
-    """Space-join of a reading-order block's lines (readingorder.py:19-20)."""
-    return " ".join(line_texts)

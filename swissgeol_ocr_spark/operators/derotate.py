@@ -16,15 +16,12 @@ The snap threshold (25°) is load-bearing for span-sequence equality: it
 decides whether a line keeps its exact rotated bbox or gets a horizontal
 band, which in turn shifts the rect the reading-order kernel sees.
 
-All math is plain float64 trigonometry; the batched variant processes a
-page's lines as numpy columns.
+All math is plain float64 trigonometry.
 """
 
 from __future__ import annotations
 
 import math
-
-import numpy as np
 
 SNAP_DEGREES = 25.0  # textline.py:79,90
 
@@ -95,32 +92,3 @@ def derotate_quad(
         rect = (rect[0], middle_y - line_height / 2.0, rect[2], middle_y + line_height / 2.0)
 
     return rect, effective
-
-
-def derotate_rects_batch(
-    rects: np.ndarray, orientations: np.ndarray, page_height: float
-) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized T5 for axis-aligned span rects carrying an orientation.
-
-    A span's rect is its content box; its quad is the rect's corners rotated
-    by +orientation about the page's bottom-left (the inverse of the
-    derotation) — i.e. the quad as a detector would have reported it. This
-    routine reconstructs that quad and applies the reference derotation, so
-    snapped spans come out as the straightened band and non-snapped spans
-    keep their rotated bbox, matching textline.py:66-98 per element.
-    """
-    rects = np.asarray(rects, dtype=np.float64).reshape(-1, 4)
-    orientations = np.asarray(orientations, dtype=np.float64)
-    out_rects = rects.copy()
-    out_orients = orientations.copy()
-    nz = np.flatnonzero(orientations != 0.0)
-    for i in nz:
-        x0, y0, x1, y1 = rects[i]
-        quad_flat = [
-            _rotate_about(px, py, 0.0, page_height, float(orientations[i]))
-            for (px, py) in ((x0, y0), (x1, y0), (x1, y1), (x0, y1))
-        ]
-        rect, eff = derotate_quad(quad_flat, float(orientations[i]), page_height)
-        out_rects[i] = rect
-        out_orients[i] = eff
-    return out_rects, out_orients

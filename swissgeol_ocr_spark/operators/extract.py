@@ -176,12 +176,10 @@ def _extract_page(
         # untouched passthrough, page preserved
         return [(kinds[i], texts[i], media_refs[i], -1) for i in idx]
 
-    born_digital = is_digitally_born(pk, pr)
-
     if config.use_aggressive_strategy:
         removed_local, mask = clean_old_ocr_aggressive(pk, pr, page_w, page_h)
     else:
-        if born_digital:
+        if is_digitally_born(pk, pr):
             # __init__.py:128-131 — untouched passthrough (original kind
             # strings preserved, including unknown kinds)
             return [(kinds[i], texts[i], media_refs[i], -1) for i in idx]

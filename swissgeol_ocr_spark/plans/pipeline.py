@@ -64,12 +64,9 @@ _OUT_ARROW = pa.schema(
 def configure_spark(builder_or_spark):
     """Apply the scale-relevant session conf (AQE, shuffle sizing, Arrow).
 
-    Scale-dependent knobs are env-parameterised with local defaults
-    (OPTIMIZATION_r06.md 'configuration' section justifies the production
-    values); never touches ``spark.sql.shuffle.partitions`` — the bench/
-    driver own that."""
-    import os as _os
-
+    The values are fixed (OPTIMIZATION_r06.md 'configuration' section
+    justifies them); never touches ``spark.sql.shuffle.partitions`` — the
+    bench/driver own that."""
     conf = {
         # joins (guide §3.1): allow shuffled-hash where it fits instead of
         # always sort-merge (no sort, same results), and let AQE demote a
@@ -79,9 +76,7 @@ def configure_spark(builder_or_spark):
         # 64 MB broadcast relation is comfortably inside any production
         # executor heap — at true 100 TB fact-table scale the estimate is
         # far above ANY threshold, so this only affects mid-size dims.
-        "spark.sql.autoBroadcastJoinThreshold": _os.environ.get(
-            "SPARK_GRAFT_AUTOBROADCAST", "64m"
-        ),
+        "spark.sql.autoBroadcastJoinThreshold": "64m",
         "spark.sql.join.preferSortMergeJoin": "false",
         "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64m",
         "spark.sql.adaptive.enabled": "true",
@@ -346,7 +341,7 @@ def extract_pipeline(
     num_partitions: int | None = None,
     done_df: DataFrame | None = None,
     repartition: bool = True,
-    has_mega: bool | None = None,
+    has_mega: bool = True,
 ) -> DataFrame:
     """spans(doc_id, spans) → (doc_id, spans_out, n_spans_in, n_spans_out,
     n_pages), partitioned by hash(doc_id), with mega-docs split page-wise.
@@ -354,11 +349,10 @@ def extract_pipeline(
     Plan construction is fully LAZY — no Spark job runs until the caller
     acts on the result. Routing hints:
 
-    * ``has_mega``: None (default) builds both the kernel path and the
+    * ``has_mega``: True (default) builds both the kernel path and the
       mega-split subtree; AQE collapses the empty side at runtime. Pass
       False when table stats prove max(n_spans) ≤ cutoff (Iceberg column
-      max — drops the split subtree from the plan), True to document known
-      skew (same plan as None).
+      max — drops the split subtree from the plan).
     * an optional ``n_spans`` (span count) hint column on the input — a
       plain scalar column makes the small/big predicate pushdown-able so
       neither branch re-reads the heavy spans column just to route rows.
@@ -396,7 +390,7 @@ def extract_pipeline(
             F.spark_partition_id(),
         )
 
-    if has_mega is False:
+    if not has_mega:
         return run_kernel(spans_df)
 
     # Prefer a pre-materialized span count when the table carries one — a

@@ -1806,6 +1806,139 @@ FROM cand WHERE {ham} <= {bands - 1}
 SQL_SIMHASH_PAIRS = sql_dedup_simhash_pairs(_DEDUP_CFG)
 
 
+# ---------------------------------------------------------------------------
+# Similarity builders shared by the dedup and ANN faces (Spark relation and
+# DuckDB CTE twins)
+# ---------------------------------------------------------------------------
+
+
+def _augmented_embeddings_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """embeddings + the deterministic near-dup clone set, sign-hyperplane
+    bucketed (shared by the cosine near-dup query and the band-stats
+    metrics so both see the same join-key distribution)."""
+    emb = _t(spark, sf_dir, "embeddings")
+    base = emb.select(
+        "vec_id", "label",
+        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
+    )
+    clones = base.filter(F.col("vec_id") % 5 == 0).select(
+        (F.col("vec_id") + 100000).alias("vec_id"),
+        "label",
+        F.transform(
+            "embedding", lambda x, j: F.when(j == 0, x * 1.02).otherwise(x)
+        ).alias("embedding"),
+    )
+    aug = base.unionByName(clones)
+    return aug.withColumn("_bucket", simsearch.lsh_bucket(F.col("embedding"), 8))
+
+
+def _sql_lsh_buckets(src: str, n_planes: int = 8, n_tables: int = 1) -> str:
+    """DuckDB twin of simsearch.lsh_bucket as CTEs over ``src`` (vec_id,
+    v double[64]): the ``planes`` of simsearch.hyperplane_component, then
+    ``vecs``/``proj``/``buckets`` (vec_id, b0 … b{n_tables-1}), where table
+    t uses planes [t·n_planes, (t+1)·n_planes) — lsh_bucket's
+    ``plane_offset``. The sign is taken on the 6dp-rounded projection."""
+    bucket_cols = ",\n         ".join(
+        f"CAST(sum(CASE WHEN plane // {n_planes} = {t} AND round(dotp, 6) > 0 "
+        f"THEN 1 << (plane % {n_planes}) ELSE 0 END) AS INT) AS b{t}"
+        for t in range(n_tables)
+    )
+    return f"""planes AS (
+  SELECT p.plane, j.j,
+         ((p.plane * 8191 + j.j * 127 + 13) * 2654435761) % 1000 / 1000.0 - 0.5
+           AS comp
+  FROM (SELECT unnest(range(0, {n_tables * n_planes})) AS plane) p,
+       (SELECT unnest(range(0, 64)) AS j) j
+), vecs AS (
+  SELECT vec_id, generate_subscripts(v, 1) - 1 AS j, unnest(v) AS x FROM {src}
+), proj AS (
+  SELECT vec_id, plane, sum(x * comp) AS dotp
+  FROM vecs JOIN planes ON vecs.j = planes.j
+  GROUP BY vec_id, plane
+), buckets AS (
+  SELECT vec_id,
+         {bucket_cols}
+  FROM proj GROUP BY vec_id
+)"""
+
+
+# DuckDB twin of _augmented_embeddings_bucketed: ``bkt`` is the augmented
+# set (vec_id, label, v) with its sign bucket
+_SQL_AUG_BUCKETED = f"""base AS (
+  SELECT vec_id, label,
+         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+  FROM embeddings
+), clones AS (
+  SELECT vec_id + 100000 AS vec_id, label,
+         list_transform(v, (x, i) -> CASE WHEN i = 1 THEN x * 1.02 ELSE x END) AS v
+  FROM base WHERE vec_id % 5 = 0
+), aug AS (
+  SELECT * FROM base UNION ALL SELECT * FROM clones
+), {_sql_lsh_buckets("aug")}, bkt AS (
+  SELECT aug.*, b0 AS bucket FROM aug JOIN buckets USING (vec_id)
+)"""
+
+
+def _assign_block(cents: str, prefix: str) -> str:
+    """One k-means assignment round as DuckDB CTEs (max-cosine, rank tie)."""
+    return f"""
+{prefix}_expl AS (
+  SELECT b.vec_id, c.cent_rank, unnest(b.v) AS v, unnest(c.cvec) AS cv
+  FROM base b CROSS JOIN {cents} c
+), {prefix}_csims AS (
+  SELECT vec_id, cent_rank,
+         round(sum(v*cv) / (sqrt(sum(v*v)) * sqrt(sum(cv*cv))), 6) AS csim
+  FROM {prefix}_expl GROUP BY vec_id, cent_rank
+), {prefix}_assigned AS (
+  SELECT vec_id, cent_rank FROM (
+    SELECT vec_id, cent_rank,
+           row_number() OVER (PARTITION BY vec_id
+                              ORDER BY csim DESC, cent_rank ASC) AS rn
+    FROM {prefix}_csims)
+  WHERE rn = 1
+)"""
+
+
+def _update_block(assigned: str, prev_cents: str, new_cents: str, prefix: str) -> str:
+    """Centroid recentering as DuckDB CTEs: integer-quantized member means
+    ((sum(floor(v*1e6))/count)/1e6 — associative, identical in Spark)."""
+    return f"""
+{prefix}_ex AS (
+  SELECT a.cent_rank, generate_subscripts(b.v, 1) AS pos, unnest(b.v) AS v
+  FROM {assigned} a JOIN base b USING (vec_id)
+), {prefix}_sums AS (
+  SELECT cent_rank, pos,
+         CAST(sum(CAST(floor(v * 1000000.0) AS BIGINT)) AS DOUBLE)
+           / count(*) / 1000000.0 AS m
+  FROM {prefix}_ex GROUP BY cent_rank, pos
+), {prefix}_new AS (
+  SELECT cent_rank, list(m ORDER BY pos) AS cvec FROM {prefix}_sums GROUP BY cent_rank
+), {new_cents} AS (
+  SELECT c0.cent_rank, coalesce(n.cvec, c0.cvec) AS cvec
+  FROM {prev_cents} c0 LEFT JOIN {prefix}_new n USING (cent_rank)
+)"""
+
+
+def _sql_ivf_assign(n_lists: int = 8, iters: int = 2) -> str:
+    """DuckDB twin of simsearch.ivf_assign_trained as a WITH chain: ``base``
+    (vec_id, v), the first-n ``cents0``, ``iters`` assign + recenter rounds,
+    then ``fin_csims`` / ``fin_assigned`` (vec_id, cent_rank) against the
+    last codebook. ``iters=0`` assigns to the first-n codebook itself."""
+    parts = [f"""WITH base AS (
+  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+  FROM embeddings
+), cents0 AS (
+  SELECT vec_id AS cent_rank,
+         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
+  FROM embeddings ORDER BY vec_id LIMIT {n_lists}
+)"""]
+    for i in range(iters):
+        parts.append("," + _assign_block(f"cents{i}", f"a{i}"))
+        parts.append("," + _update_block(f"a{i}_assigned", f"cents{i}", f"cents{i + 1}", f"u{i}"))
+    parts.append("," + _assign_block(f"cents{iters}", "fin"))
+    return "\n".join(parts)
+
+
 def dedup_band_stats_relation(
     spark: SparkSession, sf_dir: str, config: "DedupConfig | None" = None
 ) -> DataFrame:
@@ -1875,78 +2008,23 @@ def _sql_band_stats(family: str, banded_cte: str) -> str:
 
 
 SQL_BAND_STATS = f"""
-WITH reps AS (
-  {textops.SQL_EXACT_COLLAPSE}
-), dg AS (
+WITH {_SQL_MINHASH_BANDED}, tok_dg AS (
   SELECT doc_id,
          list_transform(string_split(text, ' '), t -> md5(t)) AS dgs
   FROM reps
 ), simbands AS (
   SELECT doc_id,
          {",".join(f"({_simhash_wide_band_term(b, _DEDUP_CFG.simhash_band_bits)}) AS b{b}" for b in range(_DEDUP_CFG.simhash_bands))}
-  FROM dg
+  FROM tok_dg
 ), sim_banded AS (
   SELECT unnest([
     {",".join(f"'{b}:' || CAST(b{b} AS VARCHAR)" for b in range(_DEDUP_CFG.simhash_bands))}]) AS bk
   FROM simbands
-), sh AS (
-  SELECT doc_id,
-         list_distinct(CASE WHEN len(string_split(text, ' ')) >= 3 THEN
-           list_transform(range(1, len(string_split(text, ' ')) - 1),
-             i -> string_split(text, ' ')[i] || ' ' ||
-                  string_split(text, ' ')[i+1] || ' ' ||
-                  string_split(text, ' ')[i+2])
-         ELSE [text] END) AS shingles
-  FROM reps
-), mhdg AS (
-  SELECT doc_id, list_transform(shingles, s -> md5(s)) AS digests FROM sh
-), sig AS (
-  SELECT doc_id,
-         [list_min(list_transform(digests, d -> substr(d, 1, 4))),
-          list_min(list_transform(digests, d -> substr(d, 5, 4))),
-          list_min(list_transform(digests, d -> substr(d, 9, 4))),
-          list_min(list_transform(digests, d -> substr(d, 13, 4))),
-          list_min(list_transform(digests, d -> substr(d, 17, 4))),
-          list_min(list_transform(digests, d -> substr(d, 21, 4))),
-          list_min(list_transform(digests, d -> substr(d, 25, 4))),
-          list_min(list_transform(digests, d -> substr(d, 29, 4)))] AS sig
-  FROM mhdg
 ), mh_banded AS (
-  SELECT unnest([
-    '0:' || sig[1] || ':' || sig[2],
-    '1:' || sig[3] || ':' || sig[4],
-    '2:' || sig[5] || ':' || sig[6],
-    '3:' || sig[7] || ':' || sig[8]]) AS bk
-  FROM sig
-), base AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-), clones AS (
-  SELECT vec_id + 100000 AS vec_id, label,
-         list_transform(v, (x, i) -> CASE WHEN i = 1 THEN x * 1.02 ELSE x END) AS v
-  FROM base WHERE vec_id % 5 = 0
-), aug AS (
-  SELECT * FROM base UNION ALL SELECT * FROM clones
-), planes AS (
-  SELECT p.plane, j.j,
-         ((p.plane * 8191 + j.j * 127 + 13) * 2654435761) % 1000 / 1000.0 - 0.5
-           AS comp
-  FROM (SELECT unnest(range(0, 8)) AS plane) p,
-       (SELECT unnest(range(0, 64)) AS j) j
-), vecs AS (
-  SELECT vec_id, generate_subscripts(v, 1) - 1 AS j, unnest(v) AS x FROM aug
-), proj AS (
-  SELECT vec_id, plane, sum(x * comp) AS dotp
-  FROM vecs JOIN planes ON vecs.j = planes.j
-  GROUP BY vec_id, plane
-), buckets AS (
-  SELECT vec_id, CAST(sum(CASE WHEN round(dotp, 6) > 0 THEN 1 << plane ELSE 0 END) AS INT)
-           AS bucket
-  FROM proj GROUP BY vec_id
-), emb_banded AS (
+  SELECT band_key AS bk FROM banded
+), {_SQL_AUG_BUCKETED}, emb_banded AS (
   SELECT '0:' || CAST(label AS VARCHAR) || ':' || CAST(bucket AS VARCHAR) AS bk
-  FROM aug JOIN buckets USING (vec_id)
+  FROM bkt
 )
 {_sql_band_stats("simhash", "sim_banded")}
 UNION ALL
@@ -2323,26 +2401,6 @@ WHERE NOT EXISTS (
 """
 
 
-def _augmented_embeddings_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings + the deterministic near-dup clone set, sign-hyperplane
-    bucketed (shared by the cosine near-dup query and the band-stats
-    metrics so both see the same join-key distribution)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id", "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    clones = base.filter(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        "label",
-        F.transform(
-            "embedding", lambda x, j: F.when(j == 0, x * 1.02).otherwise(x)
-        ).alias("embedding"),
-    )
-    aug = base.unionByName(clones)
-    return aug.withColumn("_bucket", simsearch.lsh_bucket(F.col("embedding"), 8))
-
-
 def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, LSH-bucketed: candidates must share
     (label, sign-hyperplane bucket) — an equi-join on a compact key, NEVER
@@ -2371,37 +2429,10 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_DEDUP_EMBED = """
-WITH base AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-), clones AS (
-  SELECT vec_id + 100000 AS vec_id, label,
-         list_transform(v, (x, i) -> CASE WHEN i = 1 THEN x * 1.02 ELSE x END) AS v
-  FROM base WHERE vec_id % 5 = 0
-), aug AS (
-  SELECT * FROM base UNION ALL SELECT * FROM clones
-), planes AS (
-  SELECT p.plane, j.j,
-         ((p.plane * 8191 + j.j * 127 + 13) * 2654435761) % 1000 / 1000.0 - 0.5
-           AS comp
-  FROM (SELECT unnest(range(0, 8)) AS plane) p,
-       (SELECT unnest(range(0, 64)) AS j) j
-), vecs AS (
-  SELECT vec_id, generate_subscripts(v, 1) - 1 AS j, unnest(v) AS x FROM aug
-), proj AS (
-  SELECT vec_id, plane, sum(x * comp) AS dotp
-  FROM vecs JOIN planes ON vecs.j = planes.j
-  GROUP BY vec_id, plane
-), buckets AS (
-  SELECT vec_id, CAST(sum(CASE WHEN round(dotp, 6) > 0 THEN 1 << plane ELSE 0 END) AS INT)
-           AS bucket
-  FROM proj GROUP BY vec_id
-), pairs AS (
+SQL_DEDUP_EMBED = f"""
+WITH {_SQL_AUG_BUCKETED}, pairs AS (
   SELECT a.vec_id AS a_id, b.vec_id AS b_id, a.v AS va, b.v AS vb
-  FROM (SELECT aug.*, bucket FROM aug JOIN buckets USING (vec_id)) a
-  JOIN (SELECT aug.*, bucket FROM aug JOIN buckets USING (vec_id)) b
+  FROM bkt a JOIN bkt b
     ON a.label = b.label AND a.bucket = b.bucket AND a.vec_id < b.vec_id
 ), expl AS (
   SELECT a_id, b_id, unnest(va) AS x, unnest(vb) AS y
@@ -2426,7 +2457,8 @@ under test). Production SemDeDup uses ~0.95+."""
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023 shape):
     partition the embedding space with the deterministic IVF codebook
-    (first-8-by-id centroids, max-cosine assignment — simsearch.ivf_assign),
+    (first-8-by-id centroids, zero Lloyd rounds, max-cosine assignment —
+    simsearch.ivf_assign_trained(iters=0)),
     then prune WITHIN each cluster only: a vector is a semantic duplicate
     if an earlier-id clustermate scores ≥ SEMDEDUP_THR cosine; its keeper
     is the minimum such clustermate. One keep-decision row per vector.
@@ -2444,10 +2476,9 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exhaustive within a cell, so within-cluster recall is 1.0 by
     construction. No reference counterpart (LLM-pipeline family)."""
     emb = _t(spark, sf_dir, "embeddings")
-    assigned = simsearch.ivf_assign(emb, n_lists=8).repartition("ivf_list")
-    sim = F.round(
-        simsearch.cosine(F.col("a.embedding"), F.col("b.embedding")), 6
-    )
+    assigned, _ = simsearch.ivf_assign_trained(emb, n_lists=8, iters=0)
+    assigned = assigned.repartition("ivf_list")
+    sim = F.round(simsearch.cosine(F.col("a._v"), F.col("b._v")), 6)
     dup_pairs = (
         assigned.alias("a")
         .join(
@@ -2474,34 +2505,13 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_SEMANTIC_DEDUP = f"""
-WITH cents AS (
-  SELECT vec_id AS cent_rank, embedding AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT 8
-), cpairs AS (
-  SELECT e.vec_id, c.cent_rank,
-         CAST(unnest(e.embedding) AS DOUBLE) AS v,
-         CAST(unnest(c.cvec) AS DOUBLE) AS cv
-  FROM embeddings e CROSS JOIN cents c
-), csims AS (
-  SELECT vec_id, cent_rank,
-         round(sum(v*cv) / (sqrt(sum(v*v)) * sqrt(sum(cv*cv))), 9) AS csim
-  FROM cpairs GROUP BY vec_id, cent_rank
-), assigned AS (
-  SELECT vec_id, cent_rank AS ivf_list
-  FROM (SELECT vec_id, cent_rank,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY csim DESC, cent_rank ASC) AS rn
-        FROM csims)
-  WHERE rn = 1
-), pp AS (
+SQL_SEMANTIC_DEDUP = _sql_ivf_assign(n_lists=8, iters=0) + f""", pp AS (
   SELECT aa.vec_id AS src, bb.vec_id AS dst,
-         CAST(unnest(a.embedding) AS DOUBLE) AS av,
-         CAST(unnest(b.embedding) AS DOUBLE) AS bv
-  FROM assigned aa
-  JOIN assigned bb ON aa.ivf_list = bb.ivf_list AND aa.vec_id < bb.vec_id
-  JOIN embeddings a ON a.vec_id = aa.vec_id
-  JOIN embeddings b ON b.vec_id = bb.vec_id
+         unnest(a.v) AS av, unnest(b.v) AS bv
+  FROM fin_assigned aa
+  JOIN fin_assigned bb ON aa.cent_rank = bb.cent_rank AND aa.vec_id < bb.vec_id
+  JOIN base a ON a.vec_id = aa.vec_id
+  JOIN base b ON b.vec_id = bb.vec_id
 ), pc AS (
   SELECT src, dst,
          round(sum(av*bv) / (sqrt(sum(av*av)) * sqrt(sum(bv*bv))), 6) AS cs
@@ -2509,9 +2519,9 @@ WITH cents AS (
 ), dup AS (
   SELECT dst, min(src) AS dup_of FROM pc WHERE cs >= {SEMDEDUP_THR} GROUP BY dst
 )
-SELECT a.vec_id, CAST(a.ivf_list AS INT) AS ivf_list,
+SELECT a.vec_id, CAST(a.cent_rank AS INT) AS ivf_list,
        dup.dup_of IS NULL AS keep, dup.dup_of
-FROM assigned a LEFT JOIN dup ON a.vec_id = dup.dst
+FROM fin_assigned a LEFT JOIN dup ON a.vec_id = dup.dst
 """
 
 
@@ -2626,11 +2636,6 @@ def _sql_lsh_ann(
     [t·n_planes, (t+1)·n_planes)), identical probe-mask enumeration
     (simsearch.probe_masks), UNION-deduped candidates, exact rescoring."""
     masks = simsearch.probe_masks(n_planes, probe_hamming)
-    bucket_cols = ",\n         ".join(
-        f"CAST(sum(CASE WHEN plane // {n_planes} = {t} AND round(dotp, 6) > 0 "
-        f"THEN 1 << (plane % {n_planes}) ELSE 0 END) AS INT) AS b{t}"
-        for t in range(n_tables)
-    )
     q_ctes = ",\n".join(
         f"""q{t} AS (
   SELECT e.embedding AS qvec,
@@ -2648,26 +2653,10 @@ def _sql_lsh_ann(
         for t in range(n_tables)
     )
     return f"""
-WITH planes AS (
-  SELECT p.plane, j.j,
-         ((p.plane * 8191 + j.j * 127 + 13) * 2654435761) % 1000 / 1000.0 - 0.5
-           AS comp
-  FROM (SELECT unnest(range(0, {n_tables * n_planes})) AS plane) p,
-       (SELECT unnest(range(0, 64)) AS j) j
-), vecs AS (
-  SELECT vec_id,
-         generate_subscripts(embedding, 1) - 1 AS j,
-         CAST(unnest(embedding) AS DOUBLE) AS v
+WITH base AS (
+  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
   FROM embeddings
-), proj AS (
-  SELECT vec_id, plane, sum(v * comp) AS dotp
-  FROM vecs JOIN planes ON vecs.j = planes.j
-  GROUP BY vec_id, plane
-), buckets AS (
-  SELECT vec_id,
-         {bucket_cols}
-  FROM proj GROUP BY vec_id
-),
+), {_sql_lsh_buckets("base", n_planes, n_tables)},
 {q_ctes},
 cand AS (
 {cand_union}
@@ -2697,46 +2686,12 @@ SQL_LSH_ANN = _sql_lsh_ann()
 
 
 def q_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN on the untrained first-8-by-id codebook (zero Lloyd rounds),
+    probing only the query's own list."""
     emb = _t(spark, sf_dir, "embeddings")
-    return simsearch.ivf_ann(emb, query_vec_id=0, k=10, n_lists=8)
-
-
-SQL_IVF_ANN = """
-WITH cents AS (
-  SELECT vec_id AS cent_rank, embedding AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT 8
-), pairs AS (
-  SELECT e.vec_id, e.embedding, c.cent_rank,
-         CAST(unnest(e.embedding) AS DOUBLE) AS v,
-         CAST(unnest(c.cvec) AS DOUBLE) AS cv
-  FROM embeddings e CROSS JOIN cents c
-), csims AS (
-  SELECT vec_id, cent_rank,
-         round(sum(v*cv) / (sqrt(sum(v*v)) * sqrt(sum(cv*cv))), 9) AS csim
-  FROM pairs GROUP BY vec_id, cent_rank
-), assigned AS (
-  SELECT vec_id, cent_rank AS ivf_list
-  FROM (SELECT vec_id, cent_rank,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY csim DESC, cent_rank ASC) AS rn
-        FROM csims)
-  WHERE rn = 1
-), q AS (
-  SELECT e.embedding AS qvec, a.ivf_list AS qlist
-  FROM embeddings e JOIN assigned a ON e.vec_id = a.vec_id
-  WHERE e.vec_id = 0
-), cand AS (
-  SELECT e.vec_id, CAST(unnest(e.embedding) AS DOUBLE) AS v,
-         CAST(unnest(q.qvec) AS DOUBLE) AS qv
-  FROM embeddings e JOIN assigned a ON e.vec_id = a.vec_id, q
-  WHERE a.ivf_list = q.qlist AND e.vec_id <> 0
-), scored AS (
-  SELECT vec_id,
-         round(sum(v*qv) / (sqrt(sum(v*v)) * sqrt(sum(qv*qv))), 6) AS cos_sim
-  FROM cand GROUP BY vec_id
-)
-SELECT vec_id, cos_sim FROM scored ORDER BY cos_sim DESC, vec_id ASC LIMIT 10
-"""
+    return simsearch.ivf_ann_trained(
+        emb, query_vec_id=0, k=10, n_lists=8, iters=0, n_probes=1
+    )
 
 
 def q_ivf_ann_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2753,66 +2708,18 @@ def q_ivf_ann_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _assign_block(cents: str, prefix: str) -> str:
-    """One k-means assignment round as DuckDB CTEs (max-cosine, rank tie)."""
-    return f"""
-{prefix}_expl AS (
-  SELECT b.vec_id, c.cent_rank, unnest(b.v) AS v, unnest(c.cvec) AS cv
-  FROM base b CROSS JOIN {cents} c
-), {prefix}_csims AS (
-  SELECT vec_id, cent_rank,
-         round(sum(v*cv) / (sqrt(sum(v*v)) * sqrt(sum(cv*cv))), 6) AS csim
-  FROM {prefix}_expl GROUP BY vec_id, cent_rank
-), {prefix}_assigned AS (
-  SELECT vec_id, cent_rank FROM (
-    SELECT vec_id, cent_rank,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY csim DESC, cent_rank ASC) AS rn
-    FROM {prefix}_csims)
-  WHERE rn = 1
-)"""
-
-
-def _update_block(assigned: str, prev_cents: str, new_cents: str, prefix: str) -> str:
-    """Centroid recentering as DuckDB CTEs: integer-quantized member means
-    ((sum(floor(v*1e6))/count)/1e6 — associative, identical in Spark)."""
-    return f"""
-{prefix}_ex AS (
-  SELECT a.cent_rank, generate_subscripts(b.v, 1) AS pos, unnest(b.v) AS v
-  FROM {assigned} a JOIN base b USING (vec_id)
-), {prefix}_sums AS (
-  SELECT cent_rank, pos,
-         CAST(sum(CAST(floor(v * 1000000.0) AS BIGINT)) AS DOUBLE)
-           / count(*) / 1000000.0 AS m
-  FROM {prefix}_ex GROUP BY cent_rank, pos
-), {prefix}_new AS (
-  SELECT cent_rank, list(m ORDER BY pos) AS cvec FROM {prefix}_sums GROUP BY cent_rank
-), {new_cents} AS (
-  SELECT c0.cent_rank, coalesce(n.cvec, c0.cvec) AS cvec
-  FROM {prev_cents} c0 LEFT JOIN {prefix}_new n USING (cent_rank)
-)"""
-
-
-def _ivf_trained_sql(n_lists: int = 8, iters: int = 2, k: int = 10, qid: int = 0) -> str:
-    parts = [f"""WITH base AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-), cents0 AS (
-  SELECT vec_id AS cent_rank,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT {n_lists}
-)"""]
-    for i in range(iters):
-        parts.append("," + _assign_block(f"cents{i}", f"a{i}"))
-        parts.append("," + _update_block(f"a{i}_assigned", f"cents{i}", f"cents{i + 1}", f"u{i}"))
-    parts.append("," + _assign_block(f"cents{iters}", "fin"))
-    parts.append(f""", qlists AS (
+def _ivf_trained_sql(
+    n_lists: int = 8, iters: int = 2, n_probes: int = 2, k: int = 10, qid: int = 0
+) -> str:
+    """DuckDB twin of simsearch.ivf_ann_trained."""
+    return _sql_ivf_assign(n_lists, iters) + f"""
+, qlists AS (
   SELECT cent_rank AS qlist FROM (
     SELECT vec_id, cent_rank,
            row_number() OVER (PARTITION BY vec_id
                               ORDER BY csim DESC, cent_rank ASC) AS rn
     FROM fin_csims)
-  WHERE vec_id = {qid} AND rn <= {{n_probes}}
+  WHERE vec_id = {qid} AND rn <= {n_probes}
 ), qv AS (
   SELECT v AS qvec FROM base WHERE vec_id = {qid}
 ), cand AS (
@@ -2825,11 +2732,11 @@ def _ivf_trained_sql(n_lists: int = 8, iters: int = 2, k: int = 10, qid: int = 0
          round(sum(v*qv) / (sqrt(sum(v*v)) * sqrt(sum(qv*qv))), 6) AS cos_sim
   FROM cand GROUP BY vec_id
 )
-SELECT vec_id, cos_sim FROM scored ORDER BY cos_sim DESC, vec_id ASC LIMIT {k}""")
-    return "\n".join(parts)
+SELECT vec_id, cos_sim FROM scored ORDER BY cos_sim DESC, vec_id ASC LIMIT {k}"""
 
 
-SQL_IVF_ANN_TRAINED = _ivf_trained_sql().replace("{n_probes}", "2")
+SQL_IVF_ANN = _ivf_trained_sql(iters=0, n_probes=1)
+SQL_IVF_ANN_TRAINED = _ivf_trained_sql(iters=2, n_probes=2)
 
 
 def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -52,6 +52,7 @@ MEGA_FACTOR = 40
 # they are memoized per JVM via exprcache.cached_cols (ASTs only; see
 # that module's docstring for the safety argument).
 from swissgeol_ocr_spark.exprcache import cached_cols as _cached_cols
+from swissgeol_ocr_spark.functions.textops import pin_width
 
 
 def spans_schema_ddl() -> str:
@@ -60,10 +61,6 @@ def spans_schema_ddl() -> str:
         "page_no:int,x0:double,y0:double,x1:double,y1:double,"
         "confidence:double,orientation:double>>"
     )
-
-
-def out_spans_schema_ddl() -> str:
-    return "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 
 
 def replicate_documents(docs: DataFrame, factor: int) -> DataFrame:
@@ -79,29 +76,6 @@ def replicate_documents(docs: DataFrame, factor: int) -> DataFrame:
     ).select(
         F.concat(F.col("doc_id").cast("string"), F.lit("-"), F.col("_rep")).alias("doc_id"),
         *[c for c in docs.columns if c != "doc_id"],
-    )
-
-
-def _pre_partition(docs: DataFrame) -> DataFrame:
-    """Spread the raw (doc_id, text) rows across the cluster BEFORE the
-    heavy span-synthesis projections. A small parquet file arrives as ONE
-    scan split, and Catalyst keeps per-row projections attached to the
-    scan — without this, the entire per-word struct synthesis serializes
-    in a single task and the downstream 32-way kernel stage waits on it
-    (measured: a 1-task 1.5-1.9 s stage ahead of a 0.9 s kernel stage at
-    sf0.1). Shuffling the raw text first costs a few MB; the derivation
-    then runs at full width. NOTE: this hashes the RAW int64 doc_id while
-    extract_pipeline repartitions on the string-cast doc_id the synthesis
-    emits — murmur3(long) != murmur3(string), so the two exchanges do NOT
-    co-partition and the pipeline's exchange can never be elided on the
-    strength of this one; it exists purely to widen the synthesis stage.
-    Downstream-exchange rule (A/B-measured at sf0.1 on the word path):
-    the kernel is the pipeline's one consumer of the synthesis (plus the
-    mega split when ``has_mega`` is set), so the flagship, word and
-    aggressive queries pass ``extract_pipeline(..., repartition=False)``
-    and keep exactly one exchange (1.57s vs 1.83s)."""
-    return docs.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, "doc_id"
     )
 
 
@@ -132,7 +106,21 @@ def documents_to_spans(
     passes ~4000 so the subset genuinely crosses the cutoff and the
     page-split/reassemble subtree carries measured load, not just tests."""
     if pre_partition:
-        docs = _pre_partition(docs)
+        # Spread the raw (doc_id, text) rows BEFORE the heavy span-synthesis
+        # projections: a small parquet file arrives as ONE scan split and
+        # Catalyst keeps per-row projections attached to the scan, so
+        # without this the whole per-word struct synthesis serializes in a
+        # single task (measured: a 1-task 1.5-1.9 s stage ahead of a 0.9 s
+        # kernel stage at sf0.1). This hashes the RAW int64 doc_id while
+        # extract_pipeline repartitions on the string-cast doc_id the
+        # synthesis emits — murmur3(long) != murmur3(string), so the two
+        # exchanges do NOT co-partition; this one exists purely to widen
+        # the synthesis stage. The kernel is the synthesis' one consumer
+        # (plus the mega split when ``has_mega`` is set), so the flagship,
+        # word and aggressive queries pass
+        # ``extract_pipeline(..., repartition=False)`` and keep exactly one
+        # exchange (A/B at sf0.1 on the word path: 1.57s vs 1.83s).
+        docs = pin_width(docs, "doc_id")
     d = docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.split(F.col("text"), " ").alias("words"),
@@ -284,7 +272,8 @@ def documents_to_word_spans(
     like the line corpus. Pure function of (doc_id, text); all hashing is
     the engine-portable md5 arithmetic of ``_h``."""
     if pre_partition:
-        docs = _pre_partition(docs)
+        # see documents_to_spans: widens the synthesis stage only
+        docs = pin_width(docs, "doc_id")
     d = docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.split(F.col("text"), " ").alias("words"),

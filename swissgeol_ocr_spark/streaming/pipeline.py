@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import logging
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -677,9 +676,11 @@ _PROBE_MAX_REPS = 1_000_000
 # prefixes into the read as a partition filter — the scan prunes to the
 # probed directories (O(min(touched, N)/N of history), while a stream
 # whose batches touch every prefix degrades gracefully to the full scan).
-# 64 keeps per-trigger file counts sane locally; production should size it
-# so history/N stays a few hundred MB per directory.
-_INDEX_PARTS = int(os.environ.get("SPARK_GRAFT_NEARDUP_INDEX_PARTS", "64"))
+# 64 keeps per-trigger file counts sane locally. It is a constant, not a
+# setting: reads prune by the same pmod expression the writes partitioned
+# by, so an index written under one N and read under another would be
+# pruned to the wrong directories and silently miss pairs.
+_INDEX_PARTS = 64
 
 
 def _try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:

@@ -51,7 +51,14 @@ def test_ann_recall_at_10(emb):
             )
         )
         recalls["ivf_static"].append(
-            _recall(_topk_ids(simsearch.ivf_ann(emb, query_vec_id=q, k=K, n_lists=8)), exact)
+            _recall(
+                _topk_ids(
+                    simsearch.ivf_ann_trained(
+                        emb, query_vec_id=q, k=K, n_lists=8, iters=0, n_probes=1
+                    )
+                ),
+                exact,
+            )
         )
         recalls["ivf_trained"].append(
             _recall(
@@ -102,7 +109,12 @@ def test_trained_ivf_beats_static_per_query(emb):
     for q in QUERY_IDS:
         exact = _topk_ids(simsearch.cosine_topk(emb, query_vec_id=q, k=K))
         static = _recall(
-            _topk_ids(simsearch.ivf_ann(emb, query_vec_id=q, k=K, n_lists=8)), exact
+            _topk_ids(
+                simsearch.ivf_ann_trained(
+                    emb, query_vec_id=q, k=K, n_lists=8, iters=0, n_probes=1
+                )
+            ),
+            exact,
         )
         trained = _recall(
             _topk_ids(

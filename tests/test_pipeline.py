@@ -401,3 +401,23 @@ def test_passthrough_adversarial_differential(spark):
     expected = {doc_id: spec(spans or []) for doc_id, spans in rows}
     assert got == expected
     assert got["nullspans"] == ("ok", 0, 0, [])
+
+
+def test_package_reads_no_environment_outside_native_loader():
+    """Results must not depend on process environment: the only env reads
+    in the package are the native loader's opt-out and build directory
+    (operators/_native.py). A knob like the near-dup index fan-out would be
+    a correctness hazard — an index written under one value and read under
+    another prunes to the wrong directories."""
+    import pathlib
+
+    import swissgeol_ocr_spark
+
+    root = pathlib.Path(swissgeol_ocr_spark.__file__).parent
+    readers = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if p.name != "_native.py"
+        and any(t in p.read_text() for t in ("os.environ", "os.getenv"))
+    )
+    assert readers == [], readers

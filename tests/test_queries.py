@@ -347,7 +347,7 @@ def test_simhash_scale_knob_cross_setting_consistency(spark):
 # pairs proves the cross-engine parity isn't tuned to one dataset.
 SF0001_SPOT = [
     "c5_confidence_filter", "dedup_minhash_lsh", "dedup_simhash_pairs",
-    "dedup_ngram_jaccard", "dedup_embedding_cosine", "ivf_ann_trained",
+    "dedup_ngram_jaccard", "dedup_embedding_cosine", "ivf_ann", "ivf_ann_trained",
     "lsh_ann", "media_features", "media_downscale", "quality_score",
     "event_windows", "p7_downscale_budget", "corpus_curation",
     "stratified_sample", "dedup_band_stats", "boilerplate_strip",
