@@ -6,9 +6,10 @@ media_features, dedup_simhash_pairs, lsh_ann (multi-table multi-probe),
 ivf_ann_trained, dedup_band_stats, corpus_curation and the other audit
 queries listed in ``AUDIT``. ``--queries a,b,...`` picks the queries;
 ``--out DIR`` writes one ``DIR/<query>.txt`` per query instead of
-printing, and without ``--queries`` it captures the ``bench.HEADLINE``
-suite (the plan-identity check of a refactor: run it on both trees and
-diff the directories).
+printing, with the per-session ids removed (``#NNN`` expression ids, the
+``_NN`` suffix of lambda variables, ``RDD[NN]`` and ``plan_id``), and
+without ``--queries`` it captures the ``bench.HEADLINE`` suite: run it
+on two trees and ``diff -r`` the directories to check plan identity.
 
 dedup_clusters is deliberately NOT in ``AUDIT``: its star-CC loop
 localCheckpoints every round, so even constructing the final plan executes
@@ -25,6 +26,7 @@ import argparse
 import contextlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -35,6 +37,20 @@ AUDIT = (
     "tfidf_topk", "temperature_mix", "lm_score", "dedup_substrings",
     "corpus_stats", "winnow_fingerprint",
 )
+
+# ids that differ between two sessions planning the same query
+_SESSION_IDS = (
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"(lambda \w+?)_\d+"), r"\1"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+)
+
+
+def strip_session_ids(plan: str) -> str:
+    for pattern, repl in _SESSION_IDS:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def main() -> None:
@@ -73,7 +89,7 @@ def main() -> None:
             df.explain("formatted")
         if args.out:
             with open(os.path.join(args.out, f"{name}.txt"), "w") as f:
-                f.write(buf.getvalue())
+                f.write(strip_session_ids(buf.getvalue()))
         else:
             print(f"\n{'=' * 70}\n{name}\n{'=' * 70}")
             print(buf.getvalue(), end="")

@@ -37,6 +37,7 @@ def one_run(cores: str) -> None:
 
     import bench
     from swissgeol_ocr_spark.plans.config import ExtractConfig
+    from swissgeol_ocr_spark.plans.pipeline import MEGA_DOC_PAGES_PER_TASK
 
     spark = bench.build_spark(cores)
     spark.sparkContext.setLogLevel("ERROR")
@@ -51,7 +52,7 @@ def one_run(cores: str) -> None:
         "doc_id",
         F.floor(
             F.coalesce(F.col("span.page_no"), F.lit(0))
-            / F.lit(cfg.mega_doc_pages_per_task)
+            / F.lit(MEGA_DOC_PAGES_PER_TASK)
         ).alias("chunk"),
         "pos",
         "span",
@@ -62,12 +63,7 @@ def one_run(cores: str) -> None:
         .agg(
             F.sort_array(
                 F.collect_list(
-                    F.struct(
-                        F.coalesce(F.col("span.page_no"), F.lit(0)).alias("pg"),
-                        F.coalesce(F.col("span.offset"), F.lit(0)).alias("o"),
-                        F.col("pos").alias("p"),
-                        F.col("span").alias("s"),
-                    )
+                    F.struct(F.col("pos").alias("p"), F.col("span").alias("s"))
                 )
             ).alias("ordered")
         )

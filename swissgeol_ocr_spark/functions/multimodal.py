@@ -283,7 +283,7 @@ def downscale_media(media: DataFrame) -> DataFrame:
     return media.mapInPandas(kernel, media.schema)
 
 
-def extract_media_features(media: DataFrame, batch_size: int = 64) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary payload column via
     ``mapInPandas`` — one pandas chunk = many media rows, decode + reduce
     inside, no per-row Python UDF.

@@ -60,6 +60,21 @@ from swissgeol_ocr_spark.plans.config import ExtractConfig
 
 OutSpan = tuple[str, str, str, int]  # (kind, text, media_ref, offset)
 
+# Guard replacing the reference's 10MB page-payload limit
+# (applyocr.py:34-49): pages with more candidate lines than this are
+# skipped (emit base layer only), keeping a 10^12-doc job alive. The
+# reading-order kernel is O(n²)-O(n³) per page (like the reference), so
+# this also bounds worst-case task time; real pages top out well below
+# this (a dense A0 scan is ~2-3k lines).
+MAX_LINES_PER_PAGE = 5_000
+# Oversized-page guard: the visibility mask (C3/C6) is a page-area
+# byte array, so a corrupt giant coordinate would allocate page_w*page_h
+# bytes and kill the task. Pages whose area exceeds this cap (10^8 pt²
+# ≈ a 10k×10k-pt page — far beyond PDF's 14400-pt legal maximum on any
+# sane aspect ratio) are passed through untouched instead of analyzed,
+# like the reference's oversized-payload skip (applyocr.py:63-65).
+MAX_PAGE_MASK_AREA = 100_000_000.0
+
 
 def salvage_document_inputs(
     kinds, texts, media_refs, offsets, page_nos, rects, confidences, orientations
@@ -170,8 +185,8 @@ def _extract_page(
     pr = rects[idx]
     page_w = max(1.0, float(math.ceil(pr[:, 2].max()))) if idx.size else 1.0
     page_h = max(1.0, float(math.ceil(pr[:, 3].max()))) if idx.size else 1.0
-    if page_w * page_h > config.max_page_mask_area:
-        # oversized-page guard (see config.max_page_mask_area): refuse to
+    if page_w * page_h > MAX_PAGE_MASK_AREA:
+        # oversized-page guard (see MAX_PAGE_MASK_AREA): refuse to
         # allocate a giant visibility mask for a corrupt/absurd page —
         # untouched passthrough, page preserved
         return [(kinds[i], texts[i], media_refs[i], -1) for i in idx]
@@ -209,7 +224,7 @@ def _extract_page(
 
     if not cand:
         return emitted
-    if not config.build_lines_from_words and len(cand) > config.max_lines_per_page:
+    if not config.build_lines_from_words and len(cand) > MAX_LINES_PER_PAGE:
         # scale guard replacing the reference's 10MB skip (applyocr.py:63-65);
         # at word granularity the guard is applied AFTER grouping (below) so
         # the skip boundary is the same line count on both input granularities
@@ -229,7 +244,7 @@ def _extract_page(
         grouped = lines_from_words(cand_texts, cand_rects)
         if not grouped:
             return emitted
-        if len(grouped) > config.max_lines_per_page:
+        if len(grouped) > MAX_LINES_PER_PAGE:
             # line-count guard, post-grouping (same boundary as the
             # line-granularity path above)
             return emitted

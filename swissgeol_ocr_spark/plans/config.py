@@ -21,31 +21,6 @@ class ExtractConfig:
     # Spans above this count mark a document as skewed ("mega-doc"): it is
     # split page-wise before the kernel and reassembled after (SURVEY §4.2).
     mega_doc_span_cutoff: int = 20_000
-    # Pages per split task for mega docs. One page per task maximizes
-    # balance but pays the kernel's per-invocation overhead page by page;
-    # grouping a run of pages amortizes it. Round-4 measured
-    # ~6ms/invocation with the numpy reading-order kernel and set 8;
-    # round 6's native kernel cut the per-invocation cost ~25×, flipping
-    # the balance/overhead tradeoff — re-swept on the --mega corpus at
-    # 32 cores: 8/4/2/1 pages → 11.6/7.9/5.5/5.2s. 2 sits within ~5% of
-    # the optimum while keeping per-chunk scheduling overhead halved for
-    # narrow clusters; the split/reassemble output is bit-identical at
-    # any chunking (test_mega_doc_split_is_exact).
-    mega_doc_pages_per_task: int = 2
-    # Guard replacing the reference's 10MB page-payload limit
-    # (applyocr.py:34-49): pages with more candidate lines than this are
-    # skipped (emit base layer only), keeping a 10^12-doc job alive. The
-    # reading-order kernel is O(n²)-O(n³) per page (like the reference), so
-    # this also bounds worst-case task time; real pages top out well below
-    # this (a dense A0 scan is ~2-3k lines).
-    max_lines_per_page: int = 5_000
-    # Oversized-page guard: the visibility mask (C3/C6) is a page-area
-    # byte array, so a corrupt giant coordinate would allocate page_w*page_h
-    # bytes and kill the task. Pages whose area exceeds this cap (10^8 pt²
-    # ≈ a 10k×10k-pt page — far beyond PDF's 14400-pt legal maximum on any
-    # sane aspect ratio) are passed through untouched instead of analyzed,
-    # like the reference's oversized-payload skip (applyocr.py:63-65).
-    max_page_mask_area: float = 100_000_000.0
     # When the input carries word-level spans (the raw detection granularity
     # — Textract WORD blocks in the reference), group them into text lines
     # first via the E1 band/word-join rules (assemble.lines_from_words);

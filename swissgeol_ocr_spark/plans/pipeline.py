@@ -31,6 +31,18 @@ from swissgeol_ocr_spark.operators.extract import (
 )
 from swissgeol_ocr_spark.plans.config import ExtractConfig
 
+# Pages per split task for mega docs. One page per task maximizes
+# balance but pays the kernel's per-invocation overhead page by page;
+# grouping a run of pages amortizes it. Round-4 measured ~6ms/invocation
+# with the numpy reading-order kernel and set 8; round 6's native kernel
+# cut the per-invocation cost ~25×, flipping the balance/overhead
+# tradeoff — re-swept on the --mega corpus at 32 cores: 8/4/2/1 pages →
+# 11.6/7.9/5.5/5.2s. 2 sits within ~5% of the optimum while keeping
+# per-chunk scheduling overhead halved for narrow clusters; the
+# split/reassemble output is bit-identical at any chunking
+# (test_mega_doc_split_is_exact).
+MEGA_DOC_PAGES_PER_TASK = 2
+
 OUT_SCHEMA = (
     "doc_id string, "
     "spans_out array<struct<kind:string,text:string,media_ref:string,offset:int>>, "
@@ -153,9 +165,9 @@ def _extract_batches(
         ).to_numpy(zero_copy_only=False)
         # null offset/page_no → 0 (the salvage rule, applied proactively):
         # a null would otherwise become NaN in to_numpy and order LAST in
-        # the gather's lexsort, while the mega split's coalesce(…, 0) orders
-        # it first. fill_null is skipped entirely for healthy batches
-        # (null_count == 0 keeps the zero-copy view).
+        # the gather's lexsort instead of as page/offset 0 (the mega split
+        # relies on this order too). fill_null is skipped entirely for
+        # healthy batches (null_count == 0 keeps the zero-copy view).
         off_arr = struct.field("offset")
         page_arr = struct.field("page_no")
         if off_arr.null_count:
@@ -370,7 +382,7 @@ def extract_pipeline(
 
     n_part = num_partitions or spans_df.sparkSession.sparkContext.defaultParallelism
 
-    def run_kernel(df: DataFrame, do_shuffle: bool | None = None) -> DataFrame:
+    def run_kernel(df: DataFrame, do_shuffle: bool = repartition) -> DataFrame:
         # The explicit hash(doc_id) repartition (north rule) evens out the
         # kernel load for arbitrary input. When the table is already
         # bucketed/partitioned by doc_id upstream (the steady state for a
@@ -378,7 +390,7 @@ def extract_pipeline(
         # full-corpus shuffle — the single biggest cost after the kernel.
         # Hint and routing columns are pruned before the Arrow boundary.
         df = df.select("doc_id", "spans")
-        if repartition if do_shuffle is None else do_shuffle:
+        if do_shuffle:
             df = df.repartition(n_part, "doc_id")
         return df.mapInArrow(
             lambda it: _extract_batches(it, config), OUT_SCHEMA
@@ -411,12 +423,12 @@ def extract_pipeline(
 
     # --- mega-doc salting: split into page-range chunks, extract, reassemble
     # posexplode keeps each span's original array position: the re-sort
-    # orders by (page, offset, position) — exactly the unsplit kernel's
-    # stable lexsort — bit-identical even with duplicate offsets. Chunks of
-    # ``mega_doc_pages_per_task`` contiguous pages (not single pages)
-    # amortize the kernel's per-invocation Python overhead while a
+    # restores the original array order within a chunk, and the kernel's
+    # own stable (page, offset) sort (null → 0) then orders it exactly as
+    # in the unsplit doc — bit-identical even with duplicate offsets.
+    # Chunks of MEGA_DOC_PAGES_PER_TASK contiguous pages (not single
+    # pages) amortize the kernel's per-invocation Python overhead while a
     # cutoff-size doc still fans out into dozens of tasks.
-    chunk_pages = max(1, config.mega_doc_pages_per_task)
     exploded = big.select(
         "doc_id", F.posexplode("spans").alias("pos", "span")
     ).select(
@@ -425,7 +437,8 @@ def extract_pipeline(
         # null here would make the split key `doc_id#NULL` itself NULL,
         # merging spans from different mega-docs into one lost NULL-id row)
         F.floor(
-            F.coalesce(F.col("span.page_no"), F.lit(0)) / F.lit(chunk_pages)
+            F.coalesce(F.col("span.page_no"), F.lit(0))
+            / F.lit(MEGA_DOC_PAGES_PER_TASK)
         ).alias("chunk"),
         "pos",
         "span",
@@ -436,14 +449,7 @@ def extract_pipeline(
         .agg(
             F.sort_array(
                 F.collect_list(
-                    F.struct(
-                        # null page/offset → 0 (salvage rule), matching the
-                        # unsplit kernel's ordering for null fields
-                        F.coalesce(F.col("span.page_no"), F.lit(0)).alias("pg"),
-                        F.coalesce(F.col("span.offset"), F.lit(0)).alias("o"),
-                        F.col("pos").alias("p"),
-                        F.col("span").alias("s"),
-                    )
+                    F.struct(F.col("pos").alias("p"), F.col("span").alias("s"))
                 )
             ).alias("ordered")
         )

@@ -38,11 +38,12 @@ import math
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from swissgeol_ocr_spark.functions import simsearch, textops
 from swissgeol_ocr_spark.plans.config import DedupConfig, ExtractConfig
+from swissgeol_ocr_spark.sources.corpus import _h, _h_sql
 
 # module-level default: the Spark query face AND the generated SQL oracles
 # read the same instance, so changing the scale knobs re-sizes both sides
@@ -793,6 +794,21 @@ def _drain(q, timeout_s: int = 600) -> None:
         )
 
 
+def _drain_to_parquet(stream: DataFrame, work: str) -> DataFrame:
+    """Run ``stream`` as a bounded (availableNow) query into a parquet
+    sink at ``work``/out, checkpointed at ``work``/ckpt, drain it, and
+    read the sink back."""
+    q = (
+        stream.writeStream.format("parquet")
+        .option("path", f"{work}/out")
+        .option("checkpointLocation", f"{work}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    _drain(q)
+    return stream.sparkSession.read.parquet(f"{work}/out")
+
+
 def _staged_two_file_stream(first: DataFrame, second: DataFrame):
     """Stage two DataFrames as a two-file micro-batch stream
     (maxFilesPerTrigger=1 → exactly two triggers, so per-key state MUST
@@ -871,17 +887,7 @@ def q_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from swissgeol_ocr_spark.streaming.pipeline import asof_stream
 
     stream, work = _staged_event_stream(spark, sf_dir, "time")
-    out_dir = f"{work}/out"
-    q = (
-        asof_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.read.parquet(out_dir).select(
+    return _drain_to_parquet(asof_stream(stream), work).select(
         "click_id", "user_id", "click_ts", "matched_view_id", "lag_us"
     )
 
@@ -897,17 +903,7 @@ def q_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from swissgeol_ocr_spark.streaming.pipeline import funnel_stream
 
     stream, work = _staged_event_stream(spark, sf_dir, "time")
-    out_dir = f"{work}/out"
-    q = (
-        funnel_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    emits = spark.read.parquet(out_dir)
+    emits = _drain_to_parquet(funnel_stream(stream), work)
     w = Window.partitionBy("user_id").orderBy(F.desc("reached_stage"))
     return (
         emits.withColumn("_rn", F.row_number().over(w))
@@ -980,16 +976,7 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") % 2 == 0),
         docs.filter(F.col("doc_id") % 2 == 1).unionByName(dups),
     )
-    q = (
-        dedup_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", f"{work}/out")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.read.parquet(f"{work}/out").select("fp")
+    return _drain_to_parquet(dedup_stream(stream), work).select("fp")
 
 
 def q_minhash_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1398,6 +1385,15 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# DuckDB twin of textops.shingles(text): the distinct word-3-gram list,
+# or [text] for a text shorter than three words
+_SQL_SHINGLES = """list_distinct(CASE WHEN len(string_split(text, ' ')) >= 3 THEN
+           list_transform(range(1, len(string_split(text, ' ')) - 1),
+             i -> string_split(text, ' ')[i] || ' ' ||
+                  string_split(text, ' ')[i+1] || ' ' ||
+                  string_split(text, ' ')[i+2])
+         ELSE [text] END) AS shingles"""
+
 SQL_JACCARD = f"""
 WITH aug AS (
   SELECT doc_id, source, text FROM documents
@@ -1405,13 +1401,7 @@ WITH aug AS (
   SELECT doc_id + 1000000 AS doc_id, source, text || ' neardupz' AS text
   FROM documents WHERE doc_id % {JACCARD_CLONE_STRIDE} = 0
 ), sh AS (
-  SELECT doc_id, source,
-         list_distinct(CASE WHEN len(string_split(text, ' ')) >= 3 THEN
-           list_transform(range(1, len(string_split(text, ' ')) - 1),
-             i -> string_split(text, ' ')[i] || ' ' ||
-                  string_split(text, ' ')[i+1] || ' ' ||
-                  string_split(text, ' ')[i+2])
-         ELSE [text] END) AS shingles
+  SELECT doc_id, source, {_SQL_SHINGLES}
   FROM aug
 ), sizes AS (
   SELECT doc_id, len(shingles) AS n_sh FROM sh
@@ -1509,13 +1499,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_MINHASH_BANDED = f"""reps AS (
   {textops.SQL_EXACT_COLLAPSE}
 ), sh AS (
-  SELECT doc_id, n_dups,
-         list_distinct(CASE WHEN len(string_split(text, ' ')) >= 3 THEN
-           list_transform(range(1, len(string_split(text, ' ')) - 1),
-             i -> string_split(text, ' ')[i] || ' ' ||
-                  string_split(text, ' ')[i+1] || ' ' ||
-                  string_split(text, ' ')[i+2])
-         ELSE [text] END) AS shingles
+  SELECT doc_id, n_dups, {_SQL_SHINGLES}
   FROM reps
 ), dg AS (
   SELECT doc_id, n_dups, list_transform(shingles, s -> md5(s)) AS digests FROM sh
@@ -2181,27 +2165,32 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_MEDIA_FEATURES = """
-WITH m AS (
+# DuckDB twin of corpus.media_table_from_documents, shared by the four
+# media oracles: ``m`` holds one row per document with its ':media' hash,
+# ``img`` the image-kind rows with their raster dims, and ``body`` each
+# image's ASCII pixel stream (the same substring/repeat arithmetic).
+_SQL_MEDIA_TABLE = f"""m AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, text,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':media'), 1, 8)
-              AS BIGINT) AS h
+         {_h_sql("CAST(doc_id AS VARCHAR) || ':media'", 8)} AS h
   FROM documents
 ), img AS (
   SELECT doc_id, text, h,
-         CAST(h % 13 + 4 AS INT) AS px_w,
-         CAST(h % 7 + 3 AS INT) AS px_h,
+         CAST(h % 13 + 4 AS INT) AS pw,
+         CAST(h % 7 + 3 AS INT) AS ph,
          (h % 7 = 0) AS is_stencil,
          CASE WHEN h % 7 = 0 THEN 1 ELSE 3 END AS depth
   FROM m WHERE h % 3 = 0
 ), body AS (
-  SELECT doc_id, px_w, px_h, is_stencil,
+  SELECT doc_id, pw, ph, is_stencil, depth,
          substr(repeat(regexp_replace(text, '[^ -~]', '?', 'g') || ' ',
                        CAST(ceil(432.0 / (length(regexp_replace(text, '[^ -~]', '?', 'g')) + 1)) AS INT) + 1),
-                1, px_w * px_h * depth) AS s
+                1, pw * ph * depth) AS s
   FROM img
-), px AS (
-  SELECT doc_id, px_w, px_h, is_stencil,
+)"""
+
+SQL_MEDIA_FEATURES = f"""
+WITH {_SQL_MEDIA_TABLE}, px AS (
+  SELECT doc_id, pw AS px_w, ph AS px_h, is_stencil,
          list_transform(string_split(s, ''),
              c -> CASE WHEN is_stencil THEN 255 - ascii(c) ELSE ascii(c) END)
            AS codes
@@ -2243,26 +2232,8 @@ def q_media_downscale(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_MEDIA_DOWNSCALE = """
-WITH m AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':media'), 1, 8)
-              AS BIGINT) AS h
-  FROM documents
-), img AS (
-  SELECT doc_id, text, h,
-         CAST(h % 13 + 4 AS INT) AS pw,
-         CAST(h % 7 + 3 AS INT) AS ph,
-         (h % 7 = 0) AS is_stencil,
-         CASE WHEN h % 7 = 0 THEN 1 ELSE 3 END AS depth
-  FROM m WHERE h % 3 = 0
-), body AS (
-  SELECT doc_id, pw, ph, is_stencil, depth,
-         substr(repeat(regexp_replace(text, '[^ -~]', '?', 'g') || ' ',
-                       CAST(ceil(432.0 / (length(regexp_replace(text, '[^ -~]', '?', 'g')) + 1)) AS INT) + 1),
-                1, pw * ph * depth) AS s
-  FROM img
-), px AS (
+SQL_MEDIA_DOWNSCALE = f"""
+WITH {_SQL_MEDIA_TABLE}, px AS (
   -- stride-2 sample: keep sample i (1-based) whose pixel lands on an even
   -- row/col inside the floor-halved extent (pixel = (i-1)//depth,
   -- row = pixel//pw, col = pixel%pw)
@@ -2303,13 +2274,8 @@ def q_media_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_MEDIA_NORMALIZE = """
-WITH m AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':media'), 1, 8)
-              AS BIGINT) AS h
-  FROM documents
-)
+SQL_MEDIA_NORMALIZE = f"""
+WITH {_SQL_MEDIA_TABLE}
 SELECT 'media-' || doc_id AS media_ref,
        CASE WHEN h % 3 = 0 THEN 'image'
             WHEN h % 3 = 1 THEN 'audio' ELSE 'video' END AS kind,
@@ -2333,13 +2299,8 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_FRAME_SAMPLE = """
-WITH m AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':media'), 1, 8)
-              AS BIGINT) AS h
-  FROM documents
-), v AS (
+SQL_FRAME_SAMPLE = f"""
+WITH {_SQL_MEDIA_TABLE}, v AS (
   SELECT doc_id, h % 60000 + 1000 AS duration_ms FROM m WHERE h % 3 = 2
 )
 SELECT 'media-' || doc_id AS media_ref, doc_id,
@@ -2594,15 +2555,16 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simsearch.cosine_topk(emb, query_vec_id=0, k=10)
 
 
-SQL_COSINE_TOPK = """
-WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-expl AS (
-  SELECT e.vec_id,
-         CAST(unnest(e.embedding) AS DOUBLE) AS v,
-         CAST(unnest(q.qvec) AS DOUBLE) AS qv
-  FROM embeddings e, q WHERE e.vec_id <> 0
-),
-scored AS (
+def _sql_cosine_topk(k: int = 10) -> str:
+    """Exact rescoring tail shared by the cosine oracles: the ``expl`` and
+    ``scored`` CTEs over a ``cand`` (vec_id, embedding, qvec) CTE, then
+    the top-``k`` rows by 6dp cosine (ties on vec_id)."""
+    return f"""expl AS (
+  SELECT vec_id,
+         CAST(unnest(embedding) AS DOUBLE) AS v,
+         CAST(unnest(qvec) AS DOUBLE) AS qv
+  FROM cand
+), scored AS (
   SELECT vec_id,
          sum(v * qv) AS dot,
          sqrt(sum(v * v)) AS na,
@@ -2610,7 +2572,15 @@ scored AS (
   FROM expl GROUP BY vec_id
 )
 SELECT vec_id, round(dot / (na * nb), 6) AS cos_sim
-FROM scored ORDER BY cos_sim DESC, vec_id ASC LIMIT 10
+FROM scored ORDER BY cos_sim DESC, vec_id ASC LIMIT {k}"""
+
+
+SQL_COSINE_TOPK = f"""
+WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
+cand AS (
+  SELECT e.vec_id, e.embedding, q.qvec
+  FROM embeddings e, q WHERE e.vec_id <> 0
+), {_sql_cosine_topk()}
 """
 
 
@@ -2660,20 +2630,7 @@ WITH base AS (
 {q_ctes},
 cand AS (
 {cand_union}
-), expl AS (
-  SELECT vec_id,
-         CAST(unnest(embedding) AS DOUBLE) AS v,
-         CAST(unnest(qvec) AS DOUBLE) AS qv
-  FROM cand
-), scored AS (
-  SELECT vec_id,
-         sum(v * qv) AS dot,
-         sqrt(sum(v * v)) AS na,
-         sqrt(sum(qv * qv)) AS nb
-  FROM expl GROUP BY vec_id
-)
-SELECT vec_id, round(dot / (na * nb), 6) AS cos_sim
-FROM scored ORDER BY cos_sim DESC, vec_id ASC LIMIT {k}
+), {_sql_cosine_topk(k)}
 """
 
 
@@ -2925,15 +2882,7 @@ def _winnow_relations(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.col("n_grams") - 1),
-                lambda i: F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws(" ", F.slice(F.col("wd"), i + 1, k))),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint"),
+                lambda i: _h(F.concat_ws(" ", F.slice(F.col("wd"), i + 1, k)), 8),
             )
         ).alias("i", "h"),
     )
@@ -2965,9 +2914,8 @@ WITH words AS (
   FROM words
 ), grams AS (
   SELECT doc_id, n_grams, CAST(t.i AS INT) AS i,
-         CAST('0x' || substr(md5(array_to_string(
-             wd[CAST(t.i+1 AS INT) : CAST(t.i+{WINNOW_K} AS INT)], ' ')), 1, 8)
-              AS BIGINT) AS h
+         {_h_sql("array_to_string(wd[CAST(t.i+1 AS INT) : "
+                 f"CAST(t.i+{WINNOW_K} AS INT)], ' ')", 8)} AS h
   FROM sized, LATERAL unnest(range(0, n_grams)) AS t(i)
   WHERE n_grams >= {WINNOW_W}
 ), wins AS (
@@ -3212,17 +3160,11 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one linear codegen'd scan, zero shuffles; the rate lookup
     is a constant-folded CASE on the stratum. Hash arithmetic is the
-    engine-portable md5-prefix pattern (conv(substr(md5,1,8),16,10) ==
-    DuckDB CAST('0x'||substr AS BIGINT)) used throughout the corpus."""
+    engine-portable md5-prefix pair (corpus._h / _h_sql) used throughout
+    the corpus."""
     docs = _t(spark, sf_dir, "documents")
     u = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":sample"))),
-                1, 8,
-            ),
-            16, 10,
-        ).cast("bigint"),
+        _h(F.concat(F.col("doc_id").cast("string"), F.lit(":sample")), 8),
         F.lit(10000),
     )
     rate = None
@@ -3237,8 +3179,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_STRATIFIED_SAMPLE = f"""
 WITH hashed AS (
   SELECT doc_id, lang,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':sample'), 1, 8)
-              AS BIGINT) % 10000 AS u
+         {_h_sql("CAST(doc_id AS VARCHAR) || ':sample'", 8)} % 10000 AS u
   FROM documents
 )
 SELECT doc_id, lang, u
@@ -3399,6 +3340,28 @@ DECON_STRIDE = 10
 DECON_NGRAM = 4
 
 
+def _word_ngrams(n: int) -> Column:
+    """The space-joined word-``n``-grams of the ``w`` words array, in
+    order; empty for a doc shorter than ``n`` words (Spark's sequence()
+    would count DOWN for stop < start, so the empty branch is explicit)."""
+    return F.when(
+        F.size("w") >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size("w") - (n - 1)),
+            lambda i: F.concat_ws(" ", F.slice(F.col("w"), i, n)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def _sql_word_ngrams(n: int) -> str:
+    """DuckDB twin of ``_word_ngrams`` over the ``w`` list column."""
+    return f"""CASE WHEN len(w) >= {n} THEN
+           list_transform(
+             range(1, len(w) - {n - 2}),
+             i -> array_to_string(list_slice(w, i, i + {n - 1}), ' '))
+         ELSE CAST([] AS VARCHAR[]) END"""
+
+
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Test-set decontamination by n-gram overlap: one row per TRAINING
     document (the corpus minus the benchmark slice) with the number of
@@ -3411,25 +3374,11 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe; the only exchange is the per-doc hit regroup on doc_id. Grams
     are per-doc distinct BEFORE the join (array_distinct at extraction),
     so count(*) after the join IS the distinct-hit count and a gram
-    repeated inside one doc costs one row, not many. Guarded for docs
-    shorter than the gram width (Spark's sequence() would count DOWN for
-    stop < start — the empty-array branch is explicit)."""
+    repeated inside one doc costs one row, not many."""
     docs = _t(spark, sf_dir, "documents")
     words = docs.select("doc_id", F.split("text", " ").alias("w"))
-    n = DECON_NGRAM
     grams = words.select(
-        "doc_id",
-        F.when(
-            F.size("w") >= n,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("w") - (n - 1)),
-                    lambda i: F.concat_ws(" ", F.slice(F.col("w"), i, n)),
-                )
-            ),
-        )
-        .otherwise(F.array().cast("array<string>"))
-        .alias("gs"),
+        "doc_id", F.array_distinct(_word_ngrams(DECON_NGRAM)).alias("gs")
     )
     ex = grams.select("doc_id", F.explode("gs").alias("g"))
     bench = (
@@ -3453,12 +3402,7 @@ SQL_DECONTAMINATE = f"""
 WITH words AS (
   SELECT doc_id, string_split(text, ' ') AS w FROM documents
 ), grams AS (
-  SELECT doc_id,
-         CASE WHEN len(w) >= {DECON_NGRAM} THEN
-           list_distinct(list_transform(
-             range(1, len(w) - {DECON_NGRAM - 2}),
-             i -> array_to_string(list_slice(w, i, i + {DECON_NGRAM - 1}), ' ')))
-         ELSE CAST([] AS VARCHAR[]) END AS gs
+  SELECT doc_id, list_distinct({_sql_word_ngrams(DECON_NGRAM)}) AS gs
   FROM words
 ), ex AS (
   SELECT doc_id, unnest(gs) AS g FROM grams
@@ -3532,24 +3476,32 @@ def _pack_assign(d: DataFrame) -> DataFrame:
     )
 
 
+def _sql_pack_assign(src: str) -> str:
+    """DuckDB twin of ``_pack_assign``: CTEs ending in ``packed``, which is
+    ``src``'s (doc_id, ws_tokens, …) rows plus block, seq_id and
+    tok_offset."""
+    return f"""cum AS (
+  SELECT *, doc_id // {PACK_BLOCK_DOCS} AS block,
+         sum(ws_tokens) OVER (PARTITION BY doc_id // {PACK_BLOCK_DOCS}
+                              ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
+           - ws_tokens AS start
+  FROM {src}
+), packed AS (
+  SELECT * EXCLUDE (start),
+         block * 1000000
+           + CAST(floor(start / {PACK_SEQ_TOKENS}.0) AS BIGINT) AS seq_id,
+         start - CAST(floor(start / {PACK_SEQ_TOKENS}.0) AS BIGINT)
+           * {PACK_SEQ_TOKENS} AS tok_offset
+  FROM cum
+)"""
+
+
 SQL_PACK_SEQUENCES = f"""
 WITH toks AS (
-  SELECT doc_id,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens,
-         doc_id // {PACK_BLOCK_DOCS} AS block
+  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens
   FROM documents
-), cum AS (
-  SELECT doc_id, ws_tokens, block,
-         sum(ws_tokens) OVER (PARTITION BY block ORDER BY doc_id
-                              ROWS UNBOUNDED PRECEDING) - ws_tokens AS start
-  FROM toks
-)
-SELECT doc_id, ws_tokens, block,
-       block * 1000000
-         + CAST(floor(start / {PACK_SEQ_TOKENS}.0) AS BIGINT) AS seq_id,
-       start - CAST(floor(start / {PACK_SEQ_TOKENS}.0) AS BIGINT)
-         * {PACK_SEQ_TOKENS} AS tok_offset
-FROM cum
+), {_sql_pack_assign("toks")}
+SELECT * FROM packed
 """
 
 
@@ -3578,19 +3530,7 @@ def q_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     is NULL, the documented trap) and emit zero ratios, not NULLs."""
     docs = _t(spark, sf_dir, "documents")
     words = docs.select("doc_id", F.split("text", " ").alias("w"))
-    n = REP_NGRAM
-    grams = words.select(
-        "doc_id",
-        F.when(
-            F.size("w") >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size("w") - (n - 1)),
-                lambda i: F.concat_ws(" ", F.slice(F.col("w"), i, n)),
-            ),
-        )
-        .otherwise(F.array().cast("array<string>"))
-        .alias("gs"),
-    )
+    grams = words.select("doc_id", _word_ngrams(REP_NGRAM).alias("gs"))
     per_gram = grams.select(
         "doc_id", F.explode("gs").alias("g")
     ).groupBy("doc_id", "g").agg(F.count("*").alias("c"))
@@ -3634,12 +3574,7 @@ SQL_REPETITION = f"""
 WITH words AS (
   SELECT doc_id, string_split(text, ' ') AS w FROM documents
 ), grams AS (
-  SELECT doc_id,
-         CASE WHEN len(w) >= {REP_NGRAM} THEN
-           list_transform(
-             range(1, len(w) - {REP_NGRAM - 2}),
-             i -> array_to_string(list_slice(w, i, i + {REP_NGRAM - 1}), ' '))
-         ELSE CAST([] AS VARCHAR[]) END AS gs
+  SELECT doc_id, {_sql_word_ngrams(REP_NGRAM)} AS gs
   FROM words
 ), per_gram AS (
   SELECT doc_id, g, count(*) AS c
@@ -3779,20 +3714,8 @@ def q_topk_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-window formulation — same rows, engine-checkable."""
     # gram explode + integer partial aggs fuse into the scan — spread it
     docs = _spread(_t(spark, sf_dir, "documents"), "doc_id")
-    n = TOPK_NGRAM
     words = docs.select("lang", F.split("text", " ").alias("w"))
-    grams = words.select(
-        "lang",
-        F.when(
-            F.size("w") >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size("w") - (n - 1)),
-                lambda i: F.concat_ws(" ", F.slice(F.col("w"), i, n)),
-            ),
-        )
-        .otherwise(F.array().cast("array<string>"))
-        .alias("gs"),
-    )
+    grams = words.select("lang", _word_ngrams(TOPK_NGRAM).alias("gs"))
     counts = (
         grams.select("lang", F.explode("gs").alias("gram"))
         .groupBy("lang", "gram")
@@ -3828,12 +3751,7 @@ SQL_TOPK_NGRAMS = f"""
 WITH words AS (
   SELECT lang, string_split(text, ' ') AS w FROM documents
 ), grams AS (
-  SELECT lang,
-         CASE WHEN len(w) >= {TOPK_NGRAM} THEN
-           list_transform(
-             range(1, len(w) - {TOPK_NGRAM - 2}),
-             i -> array_to_string(list_slice(w, i, i + {TOPK_NGRAM - 1}), ' '))
-         ELSE CAST([] AS VARCHAR[]) END AS gs
+  SELECT lang, {_sql_word_ngrams(TOPK_NGRAM)} AS gs
   FROM words
 ), counts AS (
   SELECT lang, g AS gram, count(*) AS c
@@ -4603,13 +4521,7 @@ def _temperature_keep(docs: DataFrame) -> DataFrame:
         )
     )
     u = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":mix"))),
-                1, 8,
-            ),
-            16, 10,
-        ).cast("bigint"),
+        _h(F.concat(F.col("doc_id").cast("string"), F.lit(":mix")), 8),
         F.lit(10000),
     )
     return (
@@ -4619,9 +4531,12 @@ def _temperature_keep(docs: DataFrame) -> DataFrame:
     )
 
 
-SQL_TEMPERATURE_MIX = f"""
-WITH ns AS (
-  SELECT source, count(*) AS n_s FROM documents GROUP BY source
+def _sql_temperature_keep(src: str) -> str:
+    """DuckDB twin of ``_temperature_keep``: CTEs ending in ``mixed``,
+    which is ``src``'s surviving (doc_id, source, …) rows plus u and
+    keep_bp."""
+    return f"""ns AS (
+  SELECT source, count(*) AS n_s FROM {src} GROUP BY source
 ), tot AS (
   SELECT sum(pow(n_s, {MIX_ALPHA})) AS z, sum(n_s) AS n FROM ns
 ), q AS (
@@ -4632,14 +4547,18 @@ WITH ns AS (
            AS keep_bp
   FROM ns CROSS JOIN tot
 ), hashed AS (
-  SELECT doc_id, source,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':mix'), 1, 8)
-              AS BIGINT) % 10000 AS u
-  FROM documents
-)
-SELECT h.doc_id, h.source, h.u, q.keep_bp
-FROM hashed h JOIN q USING (source)
-WHERE h.u < q.keep_bp
+  SELECT *, {_h_sql("CAST(doc_id AS VARCHAR) || ':mix'", 8)} % 10000 AS u
+  FROM {src}
+), mixed AS (
+  SELECT h.*, q.keep_bp
+  FROM hashed h JOIN q USING (source)
+  WHERE h.u < q.keep_bp
+)"""
+
+
+SQL_TEMPERATURE_MIX = f"""
+WITH {_sql_temperature_keep("documents")}
+SELECT doc_id, source, u, keep_bp FROM mixed
 """
 
 
@@ -4734,35 +4653,11 @@ WITH survivors AS (
   SELECT c.doc_id, d.source, CAST(c.ws_tokens AS BIGINT) AS ws_tokens
   FROM ({SQL_CURATION.strip()}) c JOIN documents d USING (doc_id)
   WHERE c.keep
-), ns AS (
-  SELECT source, count(*) AS n_s FROM survivors GROUP BY source
-), tot AS (
-  SELECT sum(pow(n_s, {MIX_ALPHA})) AS z, sum(n_s) AS n FROM ns
-), q AS (
-  SELECT source,
-         CAST(floor(least(1.0, (pow(n_s, {MIX_ALPHA}) / z)
-                               * (n * {MIX_FRAC}) / n_s) * 10000
-                    + {MIX_BP_EPS}) AS INT)
-           AS keep_bp
-  FROM ns CROSS JOIN tot
-), mixed AS (
-  SELECT s.doc_id, s.source, s.ws_tokens
-  FROM survivors s JOIN q USING (source)
-  WHERE CAST('0x' || substr(md5(CAST(s.doc_id AS VARCHAR) || ':mix'), 1, 8)
-             AS BIGINT) % 10000 < q.keep_bp
-), cum AS (
-  SELECT doc_id, source, ws_tokens, doc_id // {PACK_BLOCK_DOCS} AS block,
-         sum(ws_tokens) OVER (PARTITION BY doc_id // {PACK_BLOCK_DOCS}
-                              ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-           - ws_tokens AS start
-  FROM mixed
-)
-SELECT doc_id, source, ws_tokens, block,
-       block * 1000000
-         + CAST(floor(start / {PACK_SEQ_TOKENS}.0) AS BIGINT) AS seq_id,
-       start - CAST(floor(start / {PACK_SEQ_TOKENS}.0) AS BIGINT)
-         * {PACK_SEQ_TOKENS} AS tok_offset
-FROM cum
+), {_sql_temperature_keep("survivors")},
+mixed_docs AS (
+  SELECT doc_id, source, ws_tokens FROM mixed
+), {_sql_pack_assign("mixed_docs")}
+SELECT * FROM packed
 """
 
 
@@ -4811,23 +4706,39 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _extract(
+    spark: SparkSession,
+    sf_dir: str,
+    config: ExtractConfig = ExtractConfig(),
+    granularity: str = "spans",
+) -> DataFrame:
+    """The extraction pipeline over the documents table synthesized at
+    ``granularity`` ("spans": line spans, "words": word spans) — the
+    shared body of the batch extract faces. One consumer (the kernel;
+    plus the mega split when the hint says so): the synthesis' own width
+    exchange feeds the kernel directly, so a second hash(doc_id) exchange
+    would only re-shuffle (A/B at sf0.1 on the word path: 1.57s vs
+    1.83s)."""
+    from swissgeol_ocr_spark.plans.pipeline import extract_pipeline
+    from swissgeol_ocr_spark.sources.corpus import (
+        documents_to_spans,
+        documents_to_word_spans,
+    )
+
+    synth = {"spans": documents_to_spans, "words": documents_to_word_spans}
+    spans = synth[granularity](_t(spark, sf_dir, "documents"))
+    return extract_pipeline(
+        spans, config, repartition=False,
+        has_mega=_mega_hint(spans, key=(sf_dir, granularity))
+    )
+
+
 def q_extract_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full extraction pipeline on the synthesized spans corpus; the
     oracle checks per-document metrics (input span count, output span
     count, page count) against the DuckDB-regenerated corpus + the
     expected-sequence union of SQL_EXTRACT_SEQUENCE."""
-    from swissgeol_ocr_spark.plans.pipeline import extract_pipeline
-    from swissgeol_ocr_spark.sources.corpus import documents_to_spans
-
-    docs = _t(spark, sf_dir, "documents")
-    spans = documents_to_spans(docs)
-    # one consumer (the kernel; plus the mega split when the hint says
-    # so): the synthesis' own width exchange feeds the kernel directly, so
-    # a second hash(doc_id) exchange would only re-shuffle.
-    out = extract_pipeline(
-        spans, repartition=False,
-        has_mega=_mega_hint(spans, key=(sf_dir, "spans"))
-    )
+    out = _extract(spark, sf_dir)
     return out.select("doc_id", "n_spans_in", "n_spans_out", "n_pages")
 
 
@@ -4836,18 +4747,9 @@ def q_extract_aggressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep on every page + C6 mask suppression), as the exploded span
     sequence. Oracle: golden parquet precomputed by the pure-python
     corpus+kernel twin (scripts/make_golden.py)."""
-    from swissgeol_ocr_spark.plans.pipeline import extract_pipeline
-    from swissgeol_ocr_spark.sources.corpus import documents_to_spans
-
-    docs = _t(spark, sf_dir, "documents")
-    spans = documents_to_spans(docs)
-    out = extract_pipeline(
-        # one consumer (the kernel), same rule as extract_words — no
-        # second exchange
-        spans, ExtractConfig(use_aggressive_strategy=True), repartition=False,
-        has_mega=_mega_hint(spans, key=(sf_dir, "spans"))
+    return _span_rows(
+        _extract(spark, sf_dir, ExtractConfig(use_aggressive_strategy=True))
     )
-    return _span_rows(out)
 
 
 def q_extract_words(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4857,19 +4759,11 @@ def q_extract_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch layout detection (assemble.lines_from_words band grouping
     + the draw.py:34-39 space rule) on every page. Oracle: golden parquet
     from the pure-python corpus+kernel twin (scripts/make_golden.py)."""
-    from swissgeol_ocr_spark.plans.pipeline import extract_pipeline
-    from swissgeol_ocr_spark.sources.corpus import documents_to_word_spans
-
-    docs = _t(spark, sf_dir, "documents")
-    spans = documents_to_word_spans(docs)
-    out = extract_pipeline(
-        # one consumer (the kernel) — the pre-partitioned synthesis feeds
-        # the kernel directly; a second exchange only re-shuffles (A/B at
-        # sf0.1: 1.57s vs 1.83s)
-        spans, ExtractConfig(build_lines_from_words=True), repartition=False,
-        has_mega=_mega_hint(spans, key=(sf_dir, "words"))
+    return _span_rows(
+        _extract(
+            spark, sf_dir, ExtractConfig(build_lines_from_words=True), "words"
+        )
     )
-    return _span_rows(out)
 
 
 def q_extract_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4882,18 +4776,7 @@ def q_extract_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     (scripts/make_golden.py — independent of all Spark plumbing).
     Reference semantics pinned end-to-end: ocr/readingorder.py:178-223 +
     ocr/applyocr.py:94-112."""
-    from swissgeol_ocr_spark.plans.pipeline import extract_pipeline
-    from swissgeol_ocr_spark.sources.corpus import documents_to_spans
-
-    docs = _t(spark, sf_dir, "documents")
-    spans = documents_to_spans(docs)
-    # one consumer (the kernel; plus the mega split when the hint says so),
-    # same rule as extract_flagship — no second exchange
-    out = extract_pipeline(
-        spans, repartition=False,
-        has_mega=_mega_hint(spans, key=(sf_dir, "spans"))
-    )
-    return _span_rows(out)
+    return _span_rows(_extract(spark, sf_dir))
 
 
 def _span_rows(out: DataFrame) -> DataFrame:
@@ -4969,10 +4852,10 @@ GOLDEN_SF01_QUERIES = frozenset({
 SQL_EXTRACT_SEQUENCE = f"""
 WITH base AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-         CASE WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':m'), 1, 4) AS BIGINT) % 101 = 0
+         CASE WHEN {_h_sql("CAST(doc_id AS VARCHAR) || ':m'")} % 101 = 0
               THEN string_split(repeat(text || ' ', 39) || text, ' ')
               ELSE string_split(text, ' ') END AS w,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':l'), 1, 4) AS BIGINT) % 4 AS layout
+         {_h_sql("CAST(doc_id AS VARCHAR) || ':l'")} % 4 AS layout
   FROM documents
 ), sized AS (
   SELECT doc_id, w, layout,
@@ -5021,9 +4904,9 @@ SQL_EXTRACT_FLAGSHIP = f"""
 WITH seq AS ({SQL_EXTRACT_SEQUENCE}),
 meta AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':l'), 1, 4) AS BIGINT) % 4 AS layout,
+         {_h_sql("CAST(doc_id AS VARCHAR) || ':l'")} % 4 AS layout,
          greatest(1, CAST(ceil(len(
-           CASE WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':m'), 1, 4) AS BIGINT) % 101 = 0
+           CASE WHEN {_h_sql("CAST(doc_id AS VARCHAR) || ':m'")} % 101 = 0
                 THEN string_split(repeat(text || ' ', 39) || text, ' ')
                 ELSE string_split(text, ' ') END
          ) / 8.0) AS INT)) AS n_lines

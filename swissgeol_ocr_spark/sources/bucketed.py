@@ -6,7 +6,8 @@ Spark ``bucketBy``). Then:
 
 * the kernel consumes scan output directly — the north rule's explicit
   repartition becomes a no-op (``extract_pipeline(..., repartition=False)``)
-* the skip-existing resume anti-join (reference main.py:36-41) is
+* the skip-existing resume anti-join (reference main.py:36-41,
+  ``plans.pipeline.resume_filter``) over two such tables is
   **shuffle-free**: both sides are pre-hashed on the join key, so the plan
   is scan ⋈ scan with zero Exchange operators — verified by
   tests/test_bucketed.py against the physical plan.
@@ -17,7 +18,7 @@ sandbox; the co-location property is identical.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -32,16 +33,3 @@ def write_bucketed(
         .saveAsTable(table)
     )
 
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
-def resume_join_bucketed(
-    spark: SparkSession, input_table: str, done_table: str
-) -> DataFrame:
-    """Skip-existing over two co-bucketed tables: a sort-merge anti-join
-    with no shuffle on either side."""
-    inp = spark.table(input_table)
-    done = spark.table(done_table).select("doc_id")
-    return inp.join(done, "doc_id", "left_anti")

@@ -235,11 +235,16 @@ def _build_line_spans_cols() -> tuple[Column, Column]:
 def _h(key: Column, width: int = 4) -> Column:
     """Engine-portable deterministic hash: the first ``width`` hex nibbles
     of md5(key) as an integer. DuckDB computes the identical value with
-    ``CAST('0x' || substr(md5(key), 1, width) AS BIGINT)`` — unlike
-    xxhash64, which is Spark-only. Used wherever the corpus needs
-    per-element pseudo-randomness that a cross-engine oracle must be able
-    to reproduce."""
+    ``_h_sql`` — unlike xxhash64, which is Spark-only. Used wherever the
+    corpus needs per-element pseudo-randomness that a cross-engine oracle
+    must be able to reproduce."""
     return F.conv(F.substring(F.md5(key), 1, width), 16, 10).cast("bigint")
+
+
+def _h_sql(key: str, width: int = 4) -> str:
+    """DuckDB twin of ``_h``: the SQL expression for the same integer,
+    over the SQL string expression ``key``."""
+    return f"CAST('0x' || substr(md5({key}), 1, {width}) AS BIGINT)"
 
 
 # (_renumber removed in round 6: offsets are fused into the span

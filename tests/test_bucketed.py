@@ -8,11 +8,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from swissgeol_ocr_spark.sources.bucketed import (
-    read_bucketed,
-    resume_join_bucketed,
-    write_bucketed,
-)
+from swissgeol_ocr_spark.plans.pipeline import resume_filter
+from swissgeol_ocr_spark.sources.bucketed import write_bucketed
 from swissgeol_ocr_spark.sources.corpus import documents_to_spans
 
 
@@ -40,7 +37,7 @@ def test_resume_antijoin_shuffle_free(spark, bucketed_tables):
     # force the join path (not broadcast) to prove bucket co-location
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        remaining = resume_join_bucketed(spark, inp, done)
+        remaining = resume_filter(spark.table(inp), spark.table(done))
         plan = _plan_of(remaining)
         assert "Exchange" not in plan, plan
         assert remaining.count() == 60
@@ -50,7 +47,7 @@ def test_resume_antijoin_shuffle_free(spark, bucketed_tables):
 
 def test_bucketed_scan_roundtrip(spark, bucketed_tables):
     inp, _ = bucketed_tables
-    df = read_bucketed(spark, inp)
+    df = spark.table(inp)
     assert df.count() == 100
     row = df.orderBy("doc_id").first()
     assert isinstance(row.spans, list) and len(row.spans) == row.n_spans

@@ -353,6 +353,31 @@ def test_python_corpus_twin_matches_spark(spark, sf_dir):
             assert [s.offset for s in row.spans] == list(range(len(expected)))
 
 
+def test_md5_prefix_hash_pair_agrees(spark):
+    """corpus._h (Spark) and corpus._h_sql (DuckDB) are one hashing rule
+    on two engines: every oracle that regenerates the corpus, a sample or
+    a mix in DuckDB relies on them returning the same integer. Numeric
+    doc_ids go through each engine's own string cast, as in the oracles."""
+    import duckdb
+
+    from swissgeol_ocr_spark.sources.corpus import _h, _h_sql
+
+    texts = ["", "Grundwasser – Bohrprofil Zürich", "日本語 ü", "a b c"]
+    doc_ids = [0, 7, 1000001, 9_007_199_254_740_993, -42]
+    spark_keys = [(_h(F.lit(t), w), t, w) for t in texts for w in (4, 8)] + [
+        (_h(F.lit(i).cast("bigint").cast("string"), w), i, w)
+        for i in doc_ids for w in (4, 8)
+    ]
+    got = spark.range(1).select(*[c for c, _, _ in spark_keys]).first()
+    con = duckdb.connect()
+    for (_, key, width), h in zip(spark_keys, got):
+        sql_key = "?::VARCHAR" if isinstance(key, str) else "CAST(?::BIGINT AS VARCHAR)"
+        want = con.execute(f"SELECT {_h_sql(sql_key, width)}", [key]).fetchone()[0]
+        assert h == want, (key, width)
+    # md5('') = d41d8cd9…: the prefix reads as unsigned hex
+    assert got[0] == 0xD41D and got[1] == 0xD41D8CD9
+
+
 def test_passthrough_adversarial_differential(spark):
     """Born-digital route against an explicit spec on adversarial geometry:
     each no-media document comes back as its spans sorted by
